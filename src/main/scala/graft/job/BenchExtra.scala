@@ -2,6 +2,7 @@ package graft.job
 
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /**
  * Round-8 optimization harness (guide §1): per-query timing with more
@@ -26,6 +27,8 @@ import java.nio.file.{Files, Paths}
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val mode = if (args.nonEmpty) args(0) else "time"
+    require(mode != "plans" || args.length >= 3,
+      "usage: BenchExtra plans <outDir> <suffix> [q1,q2,...|all]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -59,7 +62,7 @@ object BenchExtra {
                 df.write.format("noop").mode("overwrite").save()
               else df.count()
               true
-            } catch { case e: Throwable =>
+            } catch { case NonFatal(e) =>
               System.err.println(s"$name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
               false
             }

@@ -241,6 +241,39 @@ object CurateJob {
     }
   }
 
+  /** The columns stage 4's gate reads (repetition fractions are null for
+    * single-token docs, which pass). */
+  final case class GateScores(quality: Double, dup_3gram_frac: Option[Double],
+                              top_2gram_frac: Option[Double])
+
+  /**
+   * Stage 4's heuristic gate over (url, warc_ts, text): adds `quality`
+   * and `lang` and keeps the docs with quality ≥ minQuality whose
+   * repetition fractions (null below two tokens) are within their
+   * maxima. One map-only pass: ONE textStats kernel evaluation per row
+   * feeds qualityScore, langId and the repetition fractions (the
+   * statistics are per row, so url must be a key — it is, after the
+   * dedup stages). The gate is a TYPED filter on purpose: a Column
+   * `where` is pushed below the projections with the kernel substituted
+   * into its condition, evaluating it again per row (PlanShapeSpec pins
+   * one kernel, no Exchange, no Window).
+   */
+  private[graft] def qualityGate(docs: DataFrame, th: Thresholds): DataFrame = {
+    import docs.sparkSession.implicits._
+    val st = col("__st")
+    val (_, dup3, top2) = TextOps.repetitionFracsOf(st)
+    val (minQ, maxDup3, maxTop2) = (th.minQuality, th.maxDup3Gram, th.maxTop2Gram)
+    docs.withColumn("__st", TextOps.textStats(col("text")))
+      .select(docs.columns.toSeq.map(col) ++ Seq(
+        TextOps.qualityScoreOf(st).as("quality"),
+        TextOps.langIdOf(st).as("lang"),
+        dup3.as("dup_3gram_frac"), top2.as("top_2gram_frac")): _*)
+      .as[GateScores]
+      .filter(g => g.quality >= minQ && g.dup_3gram_frac.forall(_ <= maxDup3) &&
+        g.top_2gram_frac.forall(_ <= maxTop2))
+      .drop("dup_3gram_frac", "top_2gram_frac")
+  }
+
   /** Runs the full pipeline; returns the funnel JSON (also written to
     * `<out>/_funnel.json`). */
   def run(spark: SparkSession, pagesDir: String, outDir: String,
@@ -340,24 +373,15 @@ object CurateJob {
           .drop("text_clean", "removed_tokens")
       }
 
-    // 4. quality + repetition gates; with `--quality-model <labels>` an
-    // additional LEARNED gate — logistic regression over hashed token
-    // features trained on the caller's labeled sample (url, y) — scores
-    // every surviving doc and drops below minModelProb. The score rides
-    // the stage output (`quality_model_prob`) so operators can audit
-    // model drops the way they audit decontamination drops.
+    // 4. quality + repetition gates (qualityGate: one map-only pass);
+    // with `--quality-model <labels>` an additional LEARNED gate —
+    // logistic regression over hashed token features trained on the
+    // caller's labeled sample (url, y) — scores every surviving doc and
+    // drops below minModelProb. The score rides the stage output
+    // (`quality_model_prob`) so operators can audit model drops the way
+    // they audit decontamination drops.
     val (qualityKeep, nQuality) = stage(spark, s"$outDir/stage_quality", resume) {
-      val rep = TextOps.repetitionStats(strippedKeep, "url", "text")
-        .select(col("id").as("url"), col("dup_3gram_frac"), col("top_2gram_frac"))
-      val base = strippedKeep.drop("stripped_tokens")
-        .withColumn("quality", TextOps.qualityScore(col("text")))
-        .withColumn("lang", TextOps.langId(col("text")))
-        .join(rep, Seq("url"), "left") // single-token docs carry no stats
-        .where(
-          col("quality") >= th.minQuality &&
-            coalesce(col("dup_3gram_frac") <= th.maxDup3Gram, lit(true)) &&
-            coalesce(col("top_2gram_frac") <= th.maxTop2Gram, lit(true)))
-        .drop("dup_3gram_frac", "top_2gram_frac")
+      val base = qualityGate(strippedKeep.drop("stripped_tokens"), th)
       qualityModelPath match {
         case None => base
         case Some(p) =>

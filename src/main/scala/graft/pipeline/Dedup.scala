@@ -141,19 +141,24 @@ object Dedup {
     * map wraps ~a times and the measured miss rate matches the
     * (1-J^r)^b theory (LshRecallSpec pins both). */
   val MersennePrime: Long = (1L << 31) - 1
+
+  /** splitmix64's finalizer: the one deterministic hash stream behind
+    * the MinHash constants and the LSH/IVF hyperplanes (oracle SQL embeds
+    * the values it produces). */
+  private[pipeline] def mix64(z0: Long): Long = {
+    var z = z0 + 0x9E3779B97F4A7C15L
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    z ^ (z >>> 31)
+  }
+
   /** Public so oracle SQL generators can embed the identical constants. */
   def hashParams(k: Int): Seq[(Long, Long)] = {
-    // splitmix64 stream from seed 42 — deterministic, no RNG object
-    def mix(z0: Long): Long = {
-      var z = z0 + 0x9E3779B97F4A7C15L
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
+    // mix64 stream from seed 42 — deterministic, no RNG object;
     // a,b < 2^31 so a*h' + b stays within signed-64 when h' < 2^31
     (0 until k).map { i =>
-      val a = math.abs(mix(42L + 2L * i)) % (Int.MaxValue.toLong - 1) + 1
-      val b = math.abs(mix(43L + 2L * i)) % Int.MaxValue.toLong
+      val a = math.abs(mix64(42L + 2L * i)) % (Int.MaxValue.toLong - 1) + 1
+      val b = math.abs(mix64(43L + 2L * i)) % Int.MaxValue.toLong
       (a, b)
     }
   }
@@ -1185,24 +1190,17 @@ object Dedup {
   def cosine(a: Column, b: Column): Column =
     graft.plans.VectorKernels.cosine(a, b)
 
-  /**
-   * Embedding near-dup via random-hyperplane LSH: `planes` sign bits per
-   * table, `tables` tables; docs sharing a full sign pattern in any table
-   * are candidates; verified by exact cosine.
-   */
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
   /** Deterministic hyperplane: component c of plane p in table `table`,
     * uniform in [-1,1]. Public so oracle SQL can embed the exact doubles
     * (Double.toString round-trips, so DuckDB parses identical values). */
   def hyperplane(table: Int, p: Int, dim: Int = 64): Seq[Double] =
     (0 until dim).map(c => mix64(table * 1009L + p * 131L + c).toDouble / Long.MaxValue)
 
+  /**
+   * Embedding near-dup via random-hyperplane LSH: `planes` sign bits per
+   * table, `tables` tables; docs sharing a full sign pattern in any table
+   * are candidates; verified by exact cosine.
+   */
   def embeddingNearDup(df: DataFrame, idCol: String, vecCol: String,
                        threshold: Double = 0.95,
                        planes: Int = 12, tables: Int = 4): DataFrame = {

@@ -96,10 +96,12 @@ object Quality {
     // 1/n gradient scale consistent with the documents the gradient sums
     // actually see — otherwise class-correlated dedup (duplicates skew
     // y = 0) shifts every score by a constant logit offset
-    // materialized (label-sized): lab feeds the n/npos scalar read AND
-    // the gradient join — without the checkpoint the label expressions
-    // and the semi-join re-evaluate once per consumer (r8)
-    val lab = Mat.small(labels.select(col("id"), col("y").cast("long").as("y"))
+    // materialized: lab feeds the n/npos scalar read AND the gradient
+    // join — without the checkpoint the label expressions and the
+    // semi-join re-evaluate once per consumer (r8). Corpus-tier: labels
+    // are a third of the corpus in q54 and of caller-chosen size under
+    // CurateJob --quality-model
+    val lab = Mat.corpus(labels.select(col("id"), col("y").cast("long").as("y"))
       .join(feats.select(col("id")), Seq("id"), "left_semi"))
     // n/npos are two driver scalars — read them once and inline as
     // literals below (no checkpointed 1-row frame, no broadcast joins)

@@ -130,8 +130,8 @@ object Sampling {
     // materialized ONCE (VERDICT r7 #2): the scored base feeds BOTH the
     // phase-1 histogram and the phase-2 join as separate scans — without
     // the checkpoint the tokensCol/rankCol expressions (q62: tokenCount
-    // + the regex-heavy qualityScore over every document) evaluate twice
-    // per run. The null filter runs AFTER the checkpoint, on its scan:
+    // + qualityScore's text-statistics kernel pass over every document)
+    // evaluate twice per run. The null filter runs AFTER the checkpoint, on its scan:
     // written `where(rankCol.isNotNull)`, predicate pushdown substitutes
     // the rank EXPRESSION into the filter below the projection and every
     // row pays for it twice (the optimizer-duplication trap of

@@ -39,17 +39,10 @@ object Similarity {
       .select(col("qid"), col("rank"), col("id"), col("cos"))
   }
 
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
   /** Deterministic IVF hyperplane (distinct seed family from
     * Dedup.hyperplane). Public so oracle SQL can embed the exact doubles. */
   def ivfPlane(table: Int, p: Int, dim: Int): Seq[Double] =
-    (0 until dim).map(c => mix64(table * 7919L + p * 131L + c).toDouble / Long.MaxValue)
+    (0 until dim).map(c => Dedup.mix64(table * 7919L + p * 131L + c).toDouble / Long.MaxValue)
 
   /** Hyperplane bucket id (one table); native codegen dot kernel. */
   private def bucketSig(vec: Column, table: Int, planes: Int, dim: Int): Column = {

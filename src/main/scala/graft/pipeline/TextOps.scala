@@ -7,9 +7,12 @@ import org.apache.spark.sql.functions._
  * Text-analysis operators for a large-scale training-data pipeline, all as
  * Catalyst Column expressions (whole-stage-codegen'd, no UDFs): whitespace
  * normalization, token counting, heuristic language ID, quality scoring,
- * document fingerprinting. Mirrors of the per-document scalar helpers the
- * extraction engine uses (breadability/utils.py, scoring.py) lifted to
- * column level so they run at scan throughput.
+ * repetition statistics, document fingerprinting. The per-document counts
+ * behind langId, qualityScore and repetitionStats come from one native
+ * kernel pass (textStats); only their final arithmetic is composed here.
+ * Mirrors of the per-document scalar helpers the extraction engine uses
+ * (breadability/utils.py, scoring.py) lifted to column level so they run
+ * at scan throughput.
  */
 object TextOps {
 
@@ -318,44 +321,50 @@ object TextOps {
     }
   }
 
+  /** One native pass over `text` (graft.plans.TextStats) returning the
+    * struct of integer counts langId, qualityScore and repetitionStats
+    * are computed from; see TextStats for each field's definition. The
+    * `...Of(stats)` forms take this struct, so a caller that needs
+    * several of them projects it ONCE and derives them all from it. */
+  def textStats(text: Column): Column = graft.plans.TextStats.column(text)
+
   /**
    * Within-document REPETITION statistics — the Gopher-style repetition
    * filter signals (duplicate-word fraction, duplicate-3-gram fraction,
    * most-frequent-2-gram coverage) a quality pipeline thresholds on to
    * drop degenerate/looping text; the complement of qualityScore's
-   * length/punctuation band. Fully relational (posexplode + one per-doc
-   * window + bounded groupBys — no interpreted array lambdas): the
-   * distinct-3-gram count reuses the ShingleHash kernel (distinct hashes
-   * ≡ distinct grams at 64-bit collision odds — same acceptance class as
-   * the dedup oracles). Documents with a single token have no 2-grams
-   * and drop out (both engines agree; q51 pins it cross-engine).
+   * length/punctuation band. Map-only: one textStats pass per document
+   * (no explode, window, shuffle or join); the distinct-3-gram count
+   * reuses the ShingleHash kernel (distinct hashes ≡ distinct grams at
+   * 64-bit collision odds — same acceptance class as the dedup oracles).
+   * Documents with a single token (Dedup.tokens) have no 2-grams and drop
+   * out (both engines agree; q51 pins it cross-engine), as do null ids
+   * and null texts. Precondition: ids are UNIQUE — each row's statistics
+   * are its own text's (q51's doc_id and CurateJob's url are keys).
    */
   def repetitionStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = df.select(col(idCol).as("id"),
-      posexplode(Dedup.tokens(col(textCol)))).toDF("id", "pos", "tok")
-    val w = Window.partitionBy(col("id")).orderBy(col("pos"))
-    // materialized ONCE: the word-stats and 2-gram aggregations are two
-    // separate consumers — unmaterialized, the tokenize + posexplode +
-    // lead window ran twice (r8 single-evaluation discipline)
-    val grams = Mat.corpus(toks.withColumn("nxt", lead(col("tok"), 1).over(w)))
-    val words = grams.groupBy(col("id")).agg(
-      count(lit(1)).as("n_words"),
-      countDistinct(col("tok")).as("d_words"))
-    val twoG = grams.where(col("nxt").isNotNull)
-      .groupBy(col("id"), col("tok"), col("nxt")).agg(count(lit(1)).as("c"))
-      .groupBy(col("id")).agg(sum(col("c")).as("n_2g"), max(col("c")).as("top_2g"))
-    val threeG = df.select(col(idCol).as("id"),
-      size(Dedup.shingleHashes(col(textCol), 3)).as("d_3g"))
-    words.join(twoG, Seq("id")).join(threeG, Seq("id"))
-      .select(col("id"),
-        round(lit(1.0) - col("d_words").cast("double") / col("n_words"), 4)
-          .as("dup_word_frac"),
-        round(when(col("n_words") >= 3,
-          lit(1.0) - col("d_3g").cast("double") / (col("n_words") - 2))
-          .otherwise(0.0), 4).as("dup_3gram_frac"),
-        round(col("top_2g").cast("double") / col("n_2g"), 4)
-          .as("top_2gram_frac"))
+    val (dupWord, dup3, top2) = repetitionFracsOf(col("st"))
+    // Dedup.tokens splits on every whitespace character left after
+    // trimming spaces, so ≥ 2 tokens ⇔ such a character exists. Filtering
+    // on the kernel's n_words instead would be pushed below the
+    // projection with the kernel substituted in: two passes per row.
+    df.where(col(idCol).isNotNull &&
+        trim(col(textCol)).rlike(s"[${Dedup.WsClass}]"))
+      .select(col(idCol).as("id"), textStats(col(textCol)).as("st"))
+      .select(col("id"), dupWord.as("dup_word_frac"),
+        dup3.as("dup_3gram_frac"), top2.as("top_2gram_frac"))
+  }
+
+  /** (dup_word_frac, dup_3gram_frac, top_2gram_frac) from a textStats
+    * struct; null for documents with fewer than two tokens. */
+  def repetitionFracsOf(stats: Column): (Column, Column, Column) = {
+    val n = stats("n_words")
+    def multi(c: Column): Column = when(n >= 2, c)
+    (multi(round(lit(1.0) - stats("d_words").cast("double") / n, 4)),
+      multi(round(when(n >= 3,
+        lit(1.0) - stats("d_3g").cast("double") / (n - 2))
+        .otherwise(0.0), 4)),
+      multi(round(stats("top_2g").cast("double") / stats("n_2g"), 4)))
   }
 
   /**
@@ -363,36 +372,28 @@ object TextOps {
    * the synthetic corpus is space-tokenized). Scores a small stopword set
    * per language and takes the argmax; "und" when nothing matches.
    */
-  def langId(text: Column): Column = {
-    val norm = normalizeWs(text)
+  def langId(text: Column): Column = langIdOf(textStats(text))
+
+  /** langId from a textStats struct. */
+  def langIdOf(stats: Column): Column = {
     // script pre-pass (the standard first stage of real lang-id): count
     // characters per unicode script; CJK/Cyrillic text never matches the
     // Latin stopword lists, so it must be decided here. Fractions over
-    // non-space characters; thresholds: any meaningful kana → ja,
+    // non-space characters (the normalized text's only whitespace is one
+    // space between words); thresholds: any meaningful kana → ja,
     // otherwise a quarter of the text in one script wins.
-    val nospace = regexp_replace(norm, s"[${Dedup.WsClass}]", "")
-    val total = length(nospace).cast("double")
-    def scriptCount(re: String): Column =
-      total - length(regexp_replace(nospace, re, "")).cast("double")
-    val kana = scriptCount("[\\p{IsHiragana}\\p{IsKatakana}]")
-    val hangul = scriptCount("[\\p{IsHangul}]")
-    val han = scriptCount("[\\p{IsHan}]")
-    val cyr = scriptCount("[\\p{IsCyrillic}]")
-
-    val padded = concat(lit(" "), lower(norm), lit(" "))
-    def hits(words: Seq[String]): Column =
-      words.map(w => size(split(padded, s"[${Dedup.WsClass}]$w[${Dedup.WsClass}]")) - 1)
-        .reduce(_ + _)
-    val en = hits(Seq("the", "and", "of", "a", "to", "is"))
-    val de = hits(Seq("der", "die", "und", "das", "ist", "ein"))
-    val fr = hits(Seq("le", "la", "et", "les", "des", "est"))
-    val es = hits(Seq("el", "de", "y", "que", "los", "una"))
+    val total = (stats("len") - stats("words") + 1).cast("double")
+    def script(f: String): Column = stats(f).cast("double")
+    val en = stats("hits_en")
+    val de = stats("hits_de")
+    val fr = stats("hits_fr")
+    val es = stats("hits_es")
     val best = greatest(en, de, fr, es)
     when(total <= 0, lit("und"))
-      .when(kana / total > 0.05, lit("ja"))
-      .when(hangul / total > 0.25, lit("ko"))
-      .when(han / total > 0.25, lit("zh"))
-      .when(cyr / total > 0.25, lit("ru"))
+      .when(script("kana") / total > 0.05, lit("ja"))
+      .when(script("hangul") / total > 0.25, lit("ko"))
+      .when(script("han") / total > 0.25, lit("zh"))
+      .when(script("cyrillic") / total > 0.25, lit("ru"))
       .when(best <= 0, lit("und"))
       .when(en === best, lit("en"))
       .when(de === best, lit("de"))
@@ -405,14 +406,16 @@ object TextOps {
    * standard web-text quality gate shape (length band + sentence-final
    * punctuation + function-word presence − symbol noise).
    */
-  def qualityScore(text: Column): Column = {
-    val norm = normalizeWs(text)
-    val len = length(norm).cast("double")
-    val words = tokenCount(norm).cast("double")
+  def qualityScore(text: Column): Column = qualityScoreOf(textStats(text))
+
+  /** qualityScore from a textStats struct. */
+  def qualityScoreOf(stats: Column): Column = {
+    val len = stats("len").cast("double")
+    val words = stats("words").cast("double")
     val meanWordLen = when(words > 0, len / words).otherwise(lit(0.0))
-    val punct = length(regexp_replace(norm, "[^.!?]", "")).cast("double")
-    val symbols = length(regexp_replace(norm, s"[\\p{L}\\p{N}${Dedup.WsClass}.,;:!?'\"()-]", "")).cast("double")
-    val stopHits = (size(split(concat(lit(" "), lower(norm), lit(" ")), s"[${Dedup.WsClass}](the|and|of|a|to|is)[${Dedup.WsClass}]")) - 1).cast("double")
+    val punct = stats("punct").cast("double")
+    val symbols = stats("symbols").cast("double")
+    val stopHits = stats("stop_hits").cast("double")
     val lengthBand = when(len >= 200 && len <= 20000, 1.0)
       .when(len >= 50, 0.5).otherwise(0.0)
     val wordShape = when(meanWordLen >= 3 && meanWordLen <= 12, 1.0).otherwise(0.3)

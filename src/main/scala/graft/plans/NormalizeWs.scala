@@ -47,6 +47,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[NormalizeWs].getName, "graft_normalize_ws"),
       (children: Seq[Expression]) => NormalizeWs(children.head)))
     ext.injectFunction((
+      FunctionIdentifier("graft_text_stats"),
+      new ExpressionInfo(classOf[TextStats].getName, "graft_text_stats"),
+      (children: Seq[Expression]) => TextStats(children.head)))
+    ext.injectFunction((
       FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),
       (children: Seq[Expression]) => CosineSim(children(0), children(1))))

@@ -130,7 +130,7 @@ object VectorKernels {
   }
   // the Java∩RE2 explicit whitespace class (Dedup.WsClass) — NOT \s:
   // Java's \s includes U+000B, the DuckDB oracles' RE2 \s does not
-  private val WsRegex = org.apache.spark.unsafe.types.UTF8String.fromString("[ \\t\\n\\f\\r]+")
+  private[plans] val WsRegex = org.apache.spark.unsafe.types.UTF8String.fromString("[ \\t\\n\\f\\r]+")
 
   /**
    * Distinct hashed word n-gram shingles of a text column in ONE compiled
@@ -162,8 +162,13 @@ object VectorKernels {
     * `transform(tokens(text), hash)` — the NON-deduplicated token-hash
     * stream SimHash's majority vote needs (frequency matters there). */
   def shingleHashes(text: org.apache.spark.unsafe.types.UTF8String,
+                    n: Int, md5: Boolean, distinct: Boolean): ArrayData =
+    shingleHashes(text.trim().toLowerCase().split(WsRegex, -1), n, md5, distinct)
+
+  /** The hashing half of shingleHashes over an already-split token
+    * array (TextStats reuses its tokenization for the 3-gram count). */
+  def shingleHashes(toks: Array[org.apache.spark.unsafe.types.UTF8String],
                     n: Int, md5: Boolean, distinct: Boolean): ArrayData = {
-    val toks = text.trim().toLowerCase().split(WsRegex, -1)
     val width = if (toks.length >= n) n else toks.length
     val count = if (toks.length >= n) toks.length - n + 1 else 1
     val seen = if (distinct) new java.util.LinkedHashSet[java.lang.Long]() else null

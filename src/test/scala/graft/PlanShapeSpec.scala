@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape assertions — the properties that keep the 100 TB
@@ -124,5 +125,45 @@ class PlanShapeSpec extends AnyFunSuite {
     val p = plan(mapped.toDF())
     val exchanges = p.linesIterator.count(_.contains("Exchange"))
     assert(exchanges == 1, s"expected exactly 1 shuffle, plan:\n${p.take(3000)}")
+  }
+
+  test("stage 4's quality gate is one map-only pass: the text-statistics " +
+    "kernel once, no Exchange, no Window") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("stage4").toString
+    Seq(("u://1", new java.sql.Timestamp(0), (1 to 40).map(i => s"The cat$i sat$i on the mat$i.").mkString(" ")),
+      ("u://2", new java.sql.Timestamp(0), "loop loop loop loop loop loop"),
+      ("u://3", new java.sql.Timestamp(0), "single"))
+      .toDF("url", "warc_ts", "text").write.mode("overwrite").parquet(dir)
+    val gated = graft.job.CurateJob.qualityGate(spark.read.parquet(dir),
+      graft.job.CurateJob.Thresholds())
+    val p = plan(gated)
+    assert("graft_text_stats\\(".r.findAllMatchIn(p).size == 1, p)
+    assert(!p.contains("Exchange") && !p.contains("Window"), p)
+    assert(gated.columns.toSeq == Seq("url", "warc_ts", "text", "quality", "lang"))
+    assert(gated.select("url").as[String].collect().toSeq == Seq("u://1"))
+  }
+
+  test("repetitionStats (q51) is map-only; the text-based TextOps operators " +
+    "call the kernel once per row") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val rep = plan(graft.pipeline.TextOps.repetitionStats(docs, "doc_id", "text"))
+    assert("graft_text_stats\\(".r.findAllMatchIn(rep).size == 1, rep)
+    assert(!rep.contains("Exchange") && !rep.contains("Window"), rep)
+    // q51's only exchange is its ORDER BY's range partitioning
+    val q51 = plan(SparkEntry.queries("q51_repetition_stats")(spark, sf))
+    val exchanges = q51.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.size == 1 && exchanges.head.contains("rangepartitioning"), q51)
+    // langId / qualityScore (q12 / q13) reference the kernel from many
+    // branches; subexpression elimination must leave ONE call in the
+    // generated code
+    import org.apache.spark.sql.execution.debug._
+    for ((name, op) <- Seq[(String, Column => Column)](
+      "langId" -> graft.pipeline.TextOps.langId,
+      "qualityScore" -> graft.pipeline.TextOps.qualityScore)) {
+      val code = docs.select(op(col("text"))).queryExecution.debug
+        .codegenToSeq().map(_._2).mkString("\n")
+      assert("TextStats\\.compute\\(".r.findAllMatchIn(code).size == 1, s"$name:\n$code")
+    }
   }
 }
