@@ -526,13 +526,13 @@ object SparkEntry {
       val ta = toks.where(pmod(col("doc_id"), lit(2)) === 0)
       val tb = toks.where(pmod(col("doc_id"), lit(2)) === 1)
       val hllRows = Sketch.hllEstimate(
-        Sketch.hllMergeRegisters(
+        Sketch.merge(Sketch.Hll,
           Sketch.hllRegisters(ta, Seq("lang"), col("tok")),
           Sketch.hllRegisters(tb, Seq("lang"), col("tok")), Seq("lang")),
         Seq("lang"))
         .select(lit("hll").as("kind"), col("lang").as("key"),
           col("hll_estimate").cast("double").as("value"))
-      val cmsMerged = Sketch.cmsMerge(
+      val cmsMerged = Sketch.merge(Sketch.Cms,
         Sketch.cmsBuild(ta, col("tok")), Sketch.cmsBuild(tb, col("tok")))
       val top = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("tok").asc).limit(10)
@@ -542,7 +542,7 @@ object SparkEntry {
       val url = concat(lit("https://example.com/p/"), col("doc_id"))
       val corpus = d.where(pmod(col("doc_id"), lit(2)) === 0)
         .select(col("doc_id"), url.as("url"))
-      val bloomMerged = Sketch.bloomMerge(
+      val bloomMerged = Sketch.merge(Sketch.Bloom,
         Sketch.bloomBuild(corpus.where(pmod(col("doc_id"), lit(4)) === 0), col("url")),
         Sketch.bloomBuild(corpus.where(pmod(col("doc_id"), lit(4)) === 2), col("url")))
       val probes = d.where(col("doc_id") < 250).select(url.as("url"))
@@ -562,14 +562,14 @@ object SparkEntry {
       import graft.pipeline.Sketch
       val lens = docs(s, dir).select(col("lang"), col("doc_id"),
         length(col("text")).cast("long").as("l"))
-      val merged = Sketch.histMerge(
-        Sketch.histBuild(lens.where(pmod(col("doc_id"), lit(2)) === 0),
-          Seq("lang"), col("l")),
-        Sketch.histBuild(lens.where(pmod(col("doc_id"), lit(2)) === 1),
-          Seq("lang"), col("l")),
+      val merged = Sketch.merge(Sketch.Hist,
+        Sketch.hist2Build(lens.where(pmod(col("doc_id"), lit(2)) === 0),
+          Seq("lang"), col("l"), sBits = 0),
+        Sketch.hist2Build(lens.where(pmod(col("doc_id"), lit(2)) === 1),
+          Seq("lang"), col("l"), sBits = 0),
         Seq("lang"))
-      Sketch.histQuantiles(merged, Seq("lang"),
-        Seq(("s50", 0.5), ("s90", 0.9), ("s99", 0.99)))
+      Sketch.hist2Quantiles(merged, Seq("lang"),
+        Seq(("s50", 0.5), ("s90", 0.9), ("s99", 0.99)), sBits = 0)
         .orderBy(col("lang"))
     }),
 
@@ -933,7 +933,7 @@ object SparkEntry {
       import graft.pipeline.Sketch
       val lens = docs(s, dir).select(col("lang"), col("doc_id"),
         length(col("text")).cast("long").as("l"))
-      val merged = Sketch.hist2Merge(
+      val merged = Sketch.merge(Sketch.Hist2,
         Sketch.hist2Build(lens.where(pmod(col("doc_id"), lit(2)) === 0),
           Seq("lang"), col("l")),
         Sketch.hist2Build(lens.where(pmod(col("doc_id"), lit(2)) === 1),

@@ -40,7 +40,7 @@ import graft.extract.{Extracted, Extractor, Page}
  *
  * --profile-sketches: continuous corpus profiling — upsert this run's
  * crawl days into running per-day sketch tables (HLL distinct-token
- * registers + log2 length histogram; Sketch.upsertHll/upsertHist).
+ * registers + log2 length histogram; Sketch.corpusProfile, Sketch.upsert).
  */
 object ExtractJob {
 
@@ -250,7 +250,7 @@ object ExtractJob {
     // Artifacts: <path>/hll_tokens (distinct-token registers per day),
     // <path>/len_hist (log2 length histogram per day).
     profileSketchPath.foreach { skPath =>
-      import graft.pipeline.{Dedup, Sketch}
+      import graft.pipeline.{Mat, Sketch}
       // the day RANGE this run touched comes from the observed metrics
       // captured in the write pass — no input re-scan (a --warc input
       // would re-parse the whole drop just to list days). Upserting an
@@ -287,16 +287,11 @@ object ExtractJob {
             col("warc_day").cast("string").isin(touchedDays.toSeq: _*))
           .select(col("warc_day").cast("string").as("warc_day"),
             col("extracted_text"))
-          .localCheckpoint(true) // two sketch builds, one extraction scan
-        val toks = rows.select(col("warc_day"),
-          explode(Dedup.tokens(col("extracted_text"))).as("tok"))
-        Sketch.upsertHll(spark, Seq("warc_day"),
-          Sketch.hllRegisters(toks, Seq("warc_day"), col("tok")),
-          p = 9, s"$skPath/hll_tokens")
-        Sketch.upsertHist(spark, Seq("warc_day"),
-          Sketch.histBuild(rows, Seq("warc_day"),
-            length(col("extracted_text"))),
-          s"$skPath/len_hist")
+        // one extraction scan feeds every sketch build
+        Sketch.corpusProfile(Mat.small(rows)).foreach { t =>
+          Sketch.upsert(spark, t.family, t.groupCols, t.sketch, t.params,
+            s"$skPath/${t.name}")
+        }
       }
     }
 

@@ -1015,9 +1015,13 @@ object Dedup {
    * d²; a corpus-wide boilerplate gram is by definition FREQUENT, so
    * it ranks LAST in the rarest-first order and sits in almost no
    * doc's prefix — p ≈ 0 exactly where d explodes (pinned by the
-   * planted hot-gram test in PipelineOpsSpec). floor (not ceil) errs
-   * only toward a LONGER prefix under float rounding (the q53
-   * convention); extra candidates are absorbed by the exact verify.
+   * planted hot-gram test in SubstringDedupSpec). The verify admits a
+   * pair at round(|A∩B|/m, 4) ≥ c, i.e. at |A∩B|/m ≥ c − 5e-5, so the
+   * lemma runs at c' = (c − 5e-5)·(1 − 1e-9): the rounding slack, then
+   * q53's 1e-9 slack toward admission. floor (not ceil) and both
+   * slacks err only toward a LONGER prefix; extra candidates are
+   * absorbed by the exact verify (a pair at 0.499975, which rounds to
+   * 0.5, is pinned in SubstringDedupSpec).
    *
    * Verify: candidates (ids only, deduplicated) re-join the span
    * postings by id — |A∩B| via one (id, h) equi-join, sizes by id —
@@ -1056,12 +1060,16 @@ object Dedup {
 
   /** The containment-prefix candidate generator (see spanContainmentJoin
     * scaladoc for the lemma): (id_a, id_b) distinct, id_a < id_b, from
-    * each doc's rarest ⌊(1−c)·m⌋+1 spans joined against the FULL
-    * postings. private[graft] so the spec can pin the candidate-count
-    * collapse on a planted hot-gram corpus directly. */
+    * each doc's rarest m − ⌊c'·m⌋ + 1 spans joined against the FULL
+    * postings, c' the rounding-slacked threshold. private[graft] so the
+    * spec can pin the candidate-count collapse on a planted hot-gram
+    * corpus directly. */
   private[graft] def containmentCandidates(spans: DataFrame, sizes: DataFrame,
                                            minContainment: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    // the verify admits round(s/m, 4) ≥ c, i.e. s/m ≥ c − 5e-5: size the
+    // prefix from that threshold, with q53's 1e-9 slack toward admission
+    val cSlack = lit((minContainment - 5e-5) * (1.0 - 1e-9))
     // span df as ONE window over the h partitioning instead of a
     // groupBy + join-back (guide §2.4; r8)
     val prefix = spans
@@ -1069,8 +1077,7 @@ object Dedup {
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("id")).orderBy(col("hdf").asc, col("h").asc)))
       .join(sizes, Seq("id"))
-      .where(col("rk") <=
-        col("nspans") - floor(lit(minContainment) * col("nspans")) + 1)
+      .where(col("rk") <= col("nspans") - floor(cSlack * col("nspans")) + 1)
       .select(col("h"), col("id"))
     // prefix × full postings, both orientations in one symmetric join;
     // candidates carry ids only

@@ -439,25 +439,18 @@ object Similarity {
   }
 
   def loadPqCodebooks(spark: SparkSession, path: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(path)
-      .select(col("m"), col("ksub"), col("j"), col("k"), col("c")).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getSeq[Double](4).toArray))
-    require(rows.nonEmpty, s"codebook at $path is empty")
-    val m = rows.head._1
-    val ksub = rows.head._2
+    val df = spark.read.parquet(path)
     // every row must agree on the declared shape — appended rows from a
     // differently-shaped codebook would otherwise surface as an opaque
-    // ArrayIndexOutOfBoundsException below instead of this message
-    rows.find(r => r._1 != m || r._2 != ksub).foreach { r =>
-      throw new IllegalArgumentException(
-        s"codebook at $path mixes declared shapes: ${m}x$ksub vs ${r._1}x${r._2}")
-    }
+    // ArrayIndexOutOfBoundsException below (the sketch tables' check)
+    val Seq(m, ksub) = Sketch.readParams(df, path, Seq("m", "ksub"))
+    val rows = df.select(col("j"), col("k"), col("c")).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     // validate against the DECLARED shape (max-present indices would let
     // uniform truncation pass) — fail HERE with a clear message, not
     // with an opaque NPE inside a later encode/search job
     val out = Array.ofDim[Array[Double]](m, ksub)
-    rows.foreach { case (_, _, j, k, c) => out(j)(k) = c }
+    rows.foreach { case (j, k, c) => out(j)(k) = c }
     for (j <- 0 until m; k <- 0 until ksub)
       require(out(j)(k) != null,
         s"codebook at $path is not dense: missing (j=$j, k=$k) of ${m}x$ksub")

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -134,16 +134,6 @@ object Sketch {
       .agg(max(col("rho")).as("r"))
   }
 
-  /** Associative register merge: max per (group, bucket). The merge law
-    * merge(build(A), build(B)) ≡ build(A ∪ B) holds exactly because max
-    * is idempotent/commutative/associative — pinned cross-engine by q46
-    * and by SketchLifecycleSpec. */
-  def hllMergeRegisters(a: DataFrame, b: DataFrame,
-                        groupCols: Seq[String]): DataFrame =
-    a.unionByName(b)
-      .groupBy((groupCols.map(col) :+ col("bucket")): _*)
-      .agg(max(col("r")).as("r"))
-
   /** Registers → estimate (α·m²/Σ2^(−r) + linear-counting correction). */
   def hllEstimate(registers: DataFrame, groupCols: Seq[String],
                   p: Int = 9): DataFrame = {
@@ -162,16 +152,69 @@ object Sketch {
       .select((groupCols.map(col) :+ col("hll_estimate")): _*)
   }
 
-  // ---- sketch lifecycle: persist + merge --------------------------------
+  // ---- sketch families --------------------------------------------------
   //
   // The whole point of a sketch at 100 TB is ASSOCIATIVE MERGE: build one
   // per ingest/day, persist it, fold it into the running sketch — never
-  // re-scan history. Counter tables merge by ADD (CMS), register tables
-  // by MAX (HLL), position sets by UNION (Bloom), histograms by ADD.
-  // Persisted sketches carry their parameters on EVERY row (the declared-
-  // shape discipline of the PQ codebooks / MinHash index): two sketches
-  // built with different (d, w) or (m, k) or p silently merging would
-  // corrupt estimates, so load/merge fails loudly on a mismatch instead.
+  // re-scan history. Each family is declared ONCE below: the key columns
+  // its rows carry after the caller's group columns, its merge law (which
+  // names the merged value column, if any) and the parameters stamped on
+  // every persisted row. The merge and the persistence lifecycle (save /
+  // load / upsert / fold) are written once over those declarations.
+  // Parameters ride on EVERY row (the declared-shape discipline of the PQ
+  // codebooks): two sketches built with different (d, w) or (m, k) or p
+  // silently merging would corrupt estimates, so load / upsert / fold
+  // fail loudly on a mismatch instead (readParams).
+
+  /** How two sketches of one family combine per (group…, key…) row. */
+  sealed trait Law
+  /** Register-MAX over `value` (HLL): max is idempotent, commutative and
+    * associative, so merge(build(A), build(B)) ≡ build(A ∪ B) exactly. */
+  final case class RegisterMax(value: String) extends Law
+  /** Counter-ADD over `value` (CMS, histograms). */
+  final case class CounterAdd(value: String) extends Law
+  /** Position-UNION (Bloom): the rows are the state; no false negative
+    * survives a merge, since a key inserted into either side has all k
+    * positions in the union. */
+  case object PositionUnion extends Law
+
+  /** A sketch family: key columns, merge law, parameter columns. */
+  final case class Family(keys: Seq[String], law: Law, params: Seq[String]) {
+    /** The persisted sketch columns (parameters excluded). */
+    def columns(groupCols: Seq[String]): Seq[String] =
+      groupCols ++ keys ++ (law match {
+        case RegisterMax(v) => Seq(v)
+        case CounterAdd(v) => Seq(v)
+        case PositionUnion => Nil
+      })
+  }
+
+  val Hll = Family(Seq("bucket"), RegisterMax("r"), Seq("p"))
+  val Cms = Family(Seq("row", "bucket"), CounterAdd("cnt"), Seq("d", "w"))
+  val Bloom = Family(Seq("pos"), PositionUnion, Seq("m", "k"))
+  val Hist2 = Family(Seq("bucket", "sub"), CounterAdd("cnt"), Seq("sbits"))
+  /** hist2 at sBits = 0, where every sub is 0: persisted without the
+    * constant sub and sbits columns (the `len_hist` layout). Build with
+    * hist2Build(…, sBits = 0); read off with hist2Quantiles(…, sBits = 0). */
+  val Hist = Family(Seq("bucket"), CounterAdd("cnt"), Nil)
+
+  /** Associative merge of two same-family, same-parameter sketches under
+    * the family's law. Exact, not approximate: q46/q47/q52 compute the
+    * sketch over the full table in DuckDB and compare hashes with the
+    * merged halves. */
+  def merge(f: Family, a: DataFrame, b: DataFrame,
+            groupCols: Seq[String] = Nil): DataFrame = {
+    val cols = f.columns(groupCols).map(col)
+    val both = a.select(cols: _*).unionByName(b.select(cols: _*))
+    val keys = (groupCols ++ f.keys).map(col)
+    f.law match {
+      case RegisterMax(v) => both.groupBy(keys: _*).agg(max(col(v)).as(v))
+      case CounterAdd(v) => both.groupBy(keys: _*).agg(sum(col(v)).as(v))
+      case PositionUnion => both.distinct()
+    }
+  }
+
+  // ---- persistence lifecycle --------------------------------------------
 
   /** Sketch-ABSENT probe via the FileSystem, not a blanket read-and-catch:
     * a corrupt footer / permission error / FS hiccup on an existing
@@ -181,94 +224,111 @@ object Sketch {
     * counts as present for the same reason: a crashed overwrite can
     * leave one behind, and the operator must see the loud read failure,
     * not a quiet restart from this run's data. */
-  private[pipeline] def pathExists(spark: org.apache.spark.sql.SparkSession,
-                                   path: String): Boolean = {
+  private[pipeline] def pathExists(spark: SparkSession, path: String): Boolean = {
+    val (fs, p) = hadoopFs(spark, path)
+    fs.exists(p)
+  }
+
+  private def hadoopFs(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def withParams(df: DataFrame, params: Seq[(String, Int)]): DataFrame =
-    params.foldLeft(df) { case (d, (n, v)) => d.withColumn(n, lit(v)) }
-
-  private def readParams(df: DataFrame, path: String,
-                         names: Seq[String]): Seq[Int] = {
-    val rows = df.select(names.map(col): _*).distinct().collect()
-    require(rows.length == 1,
-      s"sketch at $path mixes parameters ${names.mkString("/")}: " +
-        rows.map(_.toSeq.mkString("(", ",", ")")).mkString(" vs "))
-    names.indices.map(rows.head.getInt)
+  private def withParams(df: DataFrame, f: Family, params: Seq[Int]): DataFrame = {
+    require(params.length == f.params.length,
+      s"expected parameters ${f.params.mkString("/")}, got ${params.mkString("/")}")
+    f.params.zip(params).foldLeft(df) { case (d, (n, v)) => d.withColumn(n, lit(v)) }
   }
 
-  /** Persist HLL registers (+ p on every row). Layout is a plain parquet
-    * table — a daily job appends nothing here; it writes its own sketch
-    * and merges via hllMergeRegisters, keeping each artifact immutable. */
-  def saveHll(registers: DataFrame, groupCols: Seq[String], p: Int,
-              path: String): Unit =
-    withParams(registers.select(
-      (groupCols.map(col) :+ col("bucket") :+ col("r")): _*), Seq("p" -> p))
+  /** The one value of each `names` column that every row of the table at
+    * `path` carries; fails loudly when rows mix values (or there are no
+    * rows to read them from). Shared with the PQ codebook loader. */
+  private[pipeline] def readParams(df: DataFrame, path: String,
+                                   names: Seq[String]): Seq[Int] =
+    if (names.isEmpty) Nil else {
+      val rows = df.select(names.map(col): _*).distinct().collect()
+      require(rows.nonEmpty,
+        s"table at $path has no rows to read ${names.mkString("/")} from")
+      require(rows.length == 1,
+        s"table at $path mixes parameters ${names.mkString("/")}: " +
+          rows.map(_.toSeq.mkString("(", ",", ")")).mkString(" vs "))
+      names.indices.map(rows.head.getInt)
+    }
+
+  private def requireSameParams(f: Family, path: String, found: Seq[Int],
+                                params: Seq[Int]): Unit = {
+    def show(ps: Seq[Int]) =
+      f.params.zip(ps).map { case (n, v) => s"$n=$v" }.mkString(", ")
+    require(found == params,
+      s"sketch at $path has ${show(found)}, ingest has ${show(params)}")
+  }
+
+  /** Persist a sketch: the family's columns plus its parameters on every
+    * row. A plain parquet overwrite — running tables are maintained by
+    * `upsert` (batch) or `fold` (streaming), never by appending here. */
+  def save(f: Family, groupCols: Seq[String], sketch: DataFrame,
+           params: Seq[Int], path: String): Unit =
+    withParams(sketch.select(f.columns(groupCols).map(col): _*), f, params)
       .write.mode("overwrite").parquet(path)
 
-  /** Load persisted registers; returns (registers, p) and fails loudly on
+  /** Load a persisted sketch; returns (sketch, params) and fails loudly on
     * a parameter mix. Resolves the newest complete fold generation when
-    * the table was written by foldHll (flat upsert layout otherwise). */
-  def loadHll(spark: org.apache.spark.sql.SparkSession, groupCols: Seq[String],
-              path: String): (DataFrame, Int) = {
-    val src = newestGen(spark, path).map(_._2).getOrElse(path)
-    val df = spark.read.parquet(src)
-    val Seq(p) = readParams(df, path, Seq("p"))
-    (df.select((groupCols.map(col) :+ col("bucket") :+ col("r")): _*), p)
+    * the table is fold-owned (the flat layout otherwise). */
+  def load(spark: SparkSession, f: Family, groupCols: Seq[String],
+           path: String): (DataFrame, Seq[Int]) = {
+    val df = spark.read.parquet(newestGen(spark, path).map(_._2).getOrElse(path))
+    (df.select(f.columns(groupCols).map(col): _*), readParams(df, path, f.params))
   }
 
   /**
-   * Upsert whole GROUPS into the persisted HLL register table at `path`
-   * (create it if absent): incoming groups REPLACE their old rows, other
-   * groups are kept. This is the continuous-profiling discipline
-   * ExtractJob --profile-sketches runs per ingest: a crawl day is the
-   * natural ingest unit, each run recomputes the sketches of the days it
-   * touched from those days' full partitions and swaps them in — so the
-   * operation is IDEMPOTENT across resumes/retries (counter-ADD merge
-   * double-counts a re-run; group replace cannot), while different days
-   * still combine associatively at read time via hllMergeRegisters. The
-   * merged frame is localCheckpoint-materialized before the overwrite so
-   * the save never reads the files it is replacing.
+   * Upsert whole GROUPS into the persisted sketch table at `path` (create
+   * it if absent): incoming groups REPLACE their old rows, other groups
+   * are kept. This is the continuous-profiling discipline ExtractJob
+   * --profile-sketches runs per ingest: a crawl day is the natural ingest
+   * unit, each run recomputes the sketches of the days it touched from
+   * those days' full partitions and swaps them in — so the operation is
+   * IDEMPOTENT across resumes/retries (counter-ADD merge double-counts a
+   * re-run; group replace cannot), while different days still combine
+   * associatively at read time via `merge`. The merged frame is
+   * materialized before the overwrite so the save never reads the files
+   * it is replacing.
    */
-  def upsertHll(spark: org.apache.spark.sql.SparkSession,
-                groupCols: Seq[String], registers: DataFrame, p: Int,
-                path: String): Unit = {
+  def upsert(spark: SparkSession, f: Family, groupCols: Seq[String],
+             sketch: DataFrame, params: Seq[Int], path: String): Unit = {
     requireNotFoldOwned(spark, path)
-    val merged = if (!pathExists(spark, path)) registers else {
-      val (old, oldP) = loadHll(spark, groupCols, path)
-      require(oldP == p, s"sketch at $path has p=$oldP, ingest has p=$p")
-      old.join(registers.select(groupCols.map(col): _*).distinct(),
-        groupCols, "left_anti").unionByName(registers)
+    val incoming = sketch.select(f.columns(groupCols).map(col): _*)
+    val merged = if (!pathExists(spark, path)) incoming else {
+      val (old, oldParams) = load(spark, f, groupCols, path)
+      requireSameParams(f, path, oldParams, params)
+      old.join(incoming.select(groupCols.map(col): _*).distinct(),
+        groupCols, "left_anti").unionByName(incoming)
     }
-    saveHll(merged.localCheckpoint(true), groupCols, p, path)
+    save(f, groupCols, Mat.small(merged), params, path)
   }
 
   // ---- incremental folds (streaming) ------------------------------------
   //
-  // The STREAMING counterpart of the upserts: a micro-batch folds its
-  // BATCH-LOCAL sketch into the persisted table via the associative merge
-  // (max for HLL registers, ADD for histogram counters) — O(batch), never
-  // a re-scan of the day's earlier files (the r5 recompute-the-day shape
-  // cost O(triggers × day) when a crawl day arrived across T triggers).
-  // Replay safety comes from a per-GROUP, per-TABLE high-water mark: every
-  // row carries `folded_batch` = the id of the last micro-batch folded
-  // into its group, and a fold with batchId ≤ the group's mark is a no-op
-  // for that group (Structured Streaming replays a crashed batch under
-  // the SAME id, and foreachBatch ids are monotonic). The mark lives in
-  // the table itself, so "sketch updated" and "batch consumed" commit in
-  // ONE write — a crash between the two sketch tables' folds replays the
-  // batch, and each table's own mark decides (counter-ADD would
-  // double-count exactly the already-folded one without it). That one
-  // write is a GENERATION commit (below): a crash inside the write
-  // itself leaves the previous generation intact, never a half-deleted
-  // table.
+  // The STREAMING counterpart of upsert: a micro-batch folds its
+  // BATCH-LOCAL sketch into the persisted table via the family's merge —
+  // O(batch), never a re-scan of the day's earlier files (the r5
+  // recompute-the-day shape cost O(triggers × day) when a crawl day
+  // arrived across T triggers). Replay safety comes from a per-GROUP,
+  // per-TABLE high-water mark: every row carries `folded_batch` = the id
+  // of the last micro-batch folded into its group, and a fold with
+  // batchId ≤ the group's mark is a no-op for that group (Structured
+  // Streaming replays a crashed batch under the SAME id, and foreachBatch
+  // ids are monotonic). The mark lives in the table itself, so "sketch
+  // updated" and "batch consumed" commit in ONE write — a crash between
+  // two sketch tables' folds replays the batch, and each table's own mark
+  // decides (counter-ADD would double-count exactly the already-folded
+  // one without it). That one write is a GENERATION commit (below): a
+  // crash inside the write itself leaves the previous generation intact,
+  // never a half-deleted table.
   //
   // A sketch table is owned by ONE discipline: batch jobs group-REPLACE
-  // via upsert*, streams fold via fold* — mixing them on one path would
+  // via upsert, streams fold via fold — mixing them on one path would
   // let a fold ADD rows an upsert already replaced (rows written by
-  // upsert* carry no mark and read as -1: any fold may touch them).
+  // upsert carry no mark and read as -1: any fold may touch them).
 
   // Fold COMMIT protocol: the fold rewrites the whole (tiny) sketch
   // table, and parquet overwrite is delete-then-write — a crash in that
@@ -280,22 +340,16 @@ object Sketch {
   // is invisible, the old generation stays intact, and the replayed
   // batch overwrites the same gen dir. Older generations are pruned
   // best-effort AFTER the commit (a crash between commit and prune
-  // leaves an extra dir the next fold removes). Tables written by the
-  // batch-side upsert* keep their flat layout; a fold over one migrates
-  // it to generations on its first commit (the flat data files are
-  // pruned with the old gens). loadHll/loadHist resolve generations
-  // first, so reads work over either layout.
-
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession,
-                       path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
+  // leaves an extra dir the next fold removes). Tables written by
+  // upsert keep their flat layout; a fold over one migrates it to
+  // generations on its first commit (the flat data files are pruned with
+  // the old gens). `load` resolves generations first, so reads work over
+  // either layout.
 
   private val GenRe = "_gen-(\\d+)".r
 
   /** Newest COMPLETE (has _SUCCESS) generation under `path`, if any. */
-  private[pipeline] def newestGen(spark: org.apache.spark.sql.SparkSession,
+  private[pipeline] def newestGen(spark: SparkSession,
                                   path: String): Option[(Long, String)] = {
     val (fs, p) = hadoopFs(spark, path)
     if (!fs.exists(p)) None
@@ -314,8 +368,7 @@ object Sketch {
 
   /** The fold's view of the current table: newest complete generation,
     * else the flat layout when it holds data files, else absent. */
-  private def foldCurrent(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Option[DataFrame] =
+  private def foldCurrent(spark: SparkSession, path: String): Option[DataFrame] =
     newestGen(spark, path) match {
       case Some((_, genPath)) => Some(spark.read.parquet(genPath))
       case None =>
@@ -341,17 +394,13 @@ object Sketch {
     * crash mid-first-write) is overwritten normally; the previous
     * complete generation still exists because pruning only runs after a
     * successful commit. Pinned by SketchLifecycleSpec's replay test. */
-  private def commitFoldGen(spark: org.apache.spark.sql.SparkSession,
-                            path: String, batchId: Long,
+  private def commitFoldGen(spark: SparkSession, path: String, batchId: Long,
                             merged: => DataFrame): Unit = {
-    val (fsg, _) = hadoopFs(spark, path)
-    val committed = fsg.exists(
-      new org.apache.hadoop.fs.Path(s"$path/_gen-$batchId/_SUCCESS"))
-    if (!committed)
+    val (fs, p) = hadoopFs(spark, path)
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_gen-$batchId/_SUCCESS")))
       merged.write.mode("overwrite").parquet(s"$path/_gen-$batchId")
     // best-effort prune: older generations + legacy flat data files
     try {
-      val (fs, p) = hadoopFs(spark, path)
       fs.listStatus(p).foreach { st =>
         val n = st.getPath.getName
         val staleGen = st.isDirectory && (n match {
@@ -378,189 +427,94 @@ object Sketch {
       old.join(touched, groupCols, "left_semi"))
   }
 
-  /** The batch-side upserts write FLAT overwrites; on a fold-owned
-    * (generation-layout) table that flat data would be INVISIBLE to
-    * readers (loads prefer the newest generation) — a silent no-op of a
-    * requested upsert. The ownership mix is a caller bug: fail loudly. */
-  private def requireNotFoldOwned(spark: org.apache.spark.sql.SparkSession,
-                                  path: String): Unit =
+  /** upsert writes FLAT overwrites; on a fold-owned (generation-layout)
+    * table that flat data would be INVISIBLE to readers (loads prefer the
+    * newest generation) — a silent no-op of a requested upsert. The
+    * ownership mix is a caller bug: fail loudly. */
+  private def requireNotFoldOwned(spark: SparkSession, path: String): Unit =
     require(newestGen(spark, path).isEmpty,
       s"sketch at $path is fold-owned (generation layout, written by " +
-        "foldHll/foldHist/foldHist2) — upserts would be invisible to " +
-        "readers; one table, one discipline")
+        "fold) — upserts would be invisible to readers; one table, one " +
+        "discipline")
 
   private def withFoldMark(df: DataFrame): DataFrame =
     if (df.columns.contains("folded_batch"))
       df.withColumn("folded_batch", coalesce(col("folded_batch"), lit(-1L)))
     else df.withColumn("folded_batch", lit(-1L))
 
-  /** Fold one micro-batch's HLL registers into the persisted table at
-    * `path` (create it if absent): register-max merge per touched group,
-    * skipped for groups whose high-water mark already covers `batchId`.
-    * loadHll reads the folded table unchanged (the mark is an extra
-    * column its projection drops). */
-  def foldHll(spark: org.apache.spark.sql.SparkSession,
-              groupCols: Seq[String], registers: DataFrame, p: Int,
-              path: String, batchId: Long): Unit = {
-    val cols = groupCols.map(col) :+ col("bucket") :+ col("r")
-    val stamped = registers.select(cols: _*)
+  /** Fold one micro-batch's sketch into the persisted table at `path`
+    * (create it if absent): the family's merge per touched group, skipped
+    * for groups whose high-water mark already covers `batchId`. `load`
+    * reads the folded table unchanged (the mark is an extra column its
+    * projection drops). */
+  def fold(spark: SparkSession, f: Family, groupCols: Seq[String],
+           sketch: DataFrame, params: Seq[Int], path: String,
+           batchId: Long): Unit = {
+    val marked = f.columns(groupCols).map(col) :+ col("folded_batch")
+    val stamped = sketch.select(f.columns(groupCols).map(col): _*)
       .withColumn("folded_batch", lit(batchId))
     val merged = foldCurrent(spark, path) match {
       case None => stamped
       case Some(df) =>
-        val Seq(oldP) = readParams(df, path, Seq("p"))
-        require(oldP == p, s"sketch at $path has p=$oldP, fold has p=$p")
-        val old = withFoldMark(df).select((cols :+ col("folded_batch")): _*)
+        requireSameParams(f, path, readParams(df, path, f.params), params)
+        val old = withFoldMark(df).select(marked: _*)
         val (fresh, untouched, touchedOld) =
           hwmFilter(old, stamped, groupCols, batchId)
-        untouched.unionByName(
-          hllMergeRegisters(touchedOld.select(cols: _*),
-            fresh.select(cols: _*), groupCols)
-            .withColumn("folded_batch", lit(batchId)))
+        untouched.unionByName(merge(f, touchedOld, fresh, groupCols)
+          .withColumn("folded_batch", lit(batchId)))
     }
-    // localCheckpoint: a REPLAYED fold reads and rewrites the same gen dir
+    // materialized: a REPLAYED fold reads and rewrites the same gen dir
     commitFoldGen(spark, path, batchId,
-      withParams(merged.localCheckpoint(true)
-        .select((cols :+ col("folded_batch")): _*), Seq("p" -> p)))
+      withParams(Mat.small(merged).select(marked: _*), f, params))
   }
 
-  /** Fold one micro-batch's histogram into the persisted table at `path`
-    * — counter-ADD merge per touched group behind the same high-water
-    * mark (ADD is the merge that double-counts on a replay; the mark is
-    * what makes the fold idempotent). */
-  def foldHist(spark: org.apache.spark.sql.SparkSession,
-               groupCols: Seq[String], hist: DataFrame,
-               path: String, batchId: Long): Unit = {
-    val cols = groupCols.map(col) :+ col("bucket") :+ col("cnt")
-    val stamped = hist.select(cols: _*)
-      .withColumn("folded_batch", lit(batchId))
-    val merged = foldCurrent(spark, path) match {
-      case None => stamped
-      case Some(df) =>
-        val old = withFoldMark(df).select((cols :+ col("folded_batch")): _*)
-        val (fresh, untouched, touchedOld) =
-          hwmFilter(old, stamped, groupCols, batchId)
-        untouched.unionByName(
-          histMerge(touchedOld.select(cols: _*), fresh.select(cols: _*),
-            groupCols)
-            .withColumn("folded_batch", lit(batchId)))
-    }
-    commitFoldGen(spark, path, batchId,
-      merged.localCheckpoint(true).select((cols :+ col("folded_batch")): _*))
-  }
+  /** One table of the corpus profile: its name under the sketch root, its
+    * family, group columns and parameters, and the sketch to persist. */
+  final case class ProfileTable(name: String, family: Family,
+                                groupCols: Seq[String], params: Seq[Int],
+                                sketch: DataFrame)
 
-  /** Group upsert for persisted histograms — same replace-groups
-    * discipline (and the same idempotence rationale) as upsertHll. */
-  def upsertHist(spark: org.apache.spark.sql.SparkSession,
-                 groupCols: Seq[String], hist: DataFrame,
-                 path: String): Unit = {
-    requireNotFoldOwned(spark, path)
-    val merged = if (!pathExists(spark, path)) hist else
-      loadHist(spark, groupCols, path)
-        .join(hist.select(groupCols.map(col): _*).distinct(),
-          groupCols, "left_anti")
-        .unionByName(hist.select(
-          (groupCols.map(col) :+ col("bucket") :+ col("cnt")): _*))
-    saveHist(merged.localCheckpoint(true), groupCols, path)
-  }
-
-  /** Associative counter merge: ADD per (row, bucket). Both sides must be
-    * same-shape (enforced at load time for persisted sketches). */
-  def cmsMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("row"), col("bucket"), col("cnt"))
-      .unionByName(b.select(col("row"), col("bucket"), col("cnt")))
-      .groupBy(col("row"), col("bucket"))
-      .agg(sum(col("cnt")).as("cnt"))
-
-  def saveCms(cms: DataFrame, d: Int, w: Int, path: String): Unit =
-    withParams(cms.select(col("row"), col("bucket"), col("cnt")),
-      Seq("d" -> d, "w" -> w))
-      .write.mode("overwrite").parquet(path)
-
-  def loadCms(spark: org.apache.spark.sql.SparkSession,
-              path: String): (DataFrame, Int, Int) = {
-    val df = spark.read.parquet(path)
-    val Seq(d, w) = readParams(df, path, Seq("d", "w"))
-    (df.select(col("row"), col("bucket"), col("cnt")), d, w)
-  }
-
-  /** Associative position-set merge: UNION (distinct). No false negatives
-    * survive a merge by construction — a key inserted into either side
-    * has all k positions in the union. */
-  def bloomMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("pos")).unionByName(b.select(col("pos"))).distinct()
-
-  def saveBloom(filter: DataFrame, m: Int, k: Int, path: String): Unit =
-    withParams(filter.select(col("pos")), Seq("m" -> m, "k" -> k))
-      .write.mode("overwrite").parquet(path)
-
-  def loadBloom(spark: org.apache.spark.sql.SparkSession,
-                path: String): (DataFrame, Int, Int) = {
-    val df = spark.read.parquet(path)
-    val Seq(m, k) = readParams(df, path, Seq("m", "k"))
-    (df.select(col("pos")), m, k)
+  /** The corpus-profile recipe over (warc_day, extracted_text) rows, shared
+    * by ExtractJob --profile-sketches (which upserts it per run) and
+    * ExtractStream.profileSketchQuery (which folds it per micro-batch):
+    * `hll_tokens`, HLL registers at p = 9 over the Dedup.tokens of the
+    * text, and `len_hist`, the log2 histogram of length(extracted_text),
+    * both per warc_day. `rows` feeds both builds: materialize it first. */
+  def corpusProfile(rows: DataFrame): Seq[ProfileTable] = {
+    val day = Seq("warc_day")
+    val toks = rows.select(col("warc_day"),
+      explode(Dedup.tokens(col("extracted_text"))).as("tok"))
+    Seq(
+      ProfileTable("hll_tokens", Hll, day, Seq(9),
+        hllRegisters(toks, day, col("tok"), p = 9)),
+      ProfileTable("len_hist", Hist, day, Nil,
+        hist2Build(rows, day, length(col("extracted_text")), sBits = 0)))
   }
 
   // ---- deterministic mergeable quantile sketch --------------------------
   //
   // Exact per-group percentiles (q45) are a full per-group SORT at scale.
-  // The production shape next to them is a fixed-boundary log2 histogram:
+  // The production shape next to them is a fixed-boundary histogram:
   // bucket = bit-length of the value (integer-exact — length(bin(v)) in
-  // both engines, which emit minimal-length binary strings), counts merge
-  // by ADD, and a quantile reads off the cumulative counts with linear
-  // interpolation inside the bucket's [2^(b−1), 2^b − 1] span. Bounded
-  // state (≤ 64 buckets per group), one partial-aggregating shuffle to
-  // build, pure integer+double math so DuckDB reproduces every estimate
-  // bit-for-bit (q47). Relative error is bounded by bucket width (~2× at
-  // the bucket edges) — the exact/sketch pairing q41/q43 established.
-
-  /** Log2 histogram of a non-negative integral column:
-    * (group…, bucket, cnt) with bucket = bit_length(v), 0 for v ≤ 0. */
-  def histBuild(df: DataFrame, groupCols: Seq[String],
-                valueCol: Column): DataFrame = {
-    val v = valueCol.cast("long")
-    val bucket = when(v <= 0, lit(0)).otherwise(length(bin(v)))
-    df.select((groupCols.map(col) :+ bucket.as("bucket")): _*)
-      .groupBy((groupCols.map(col) :+ col("bucket")): _*)
-      .agg(count(lit(1)).as("cnt"))
-  }
-
-  /** Associative histogram merge: ADD per (group, bucket). */
-  def histMerge(a: DataFrame, b: DataFrame,
-                groupCols: Seq[String]): DataFrame =
-    a.unionByName(b)
-      .groupBy((groupCols.map(col) :+ col("bucket")): _*)
-      .agg(sum(col("cnt")).as("cnt"))
-
-  def saveHist(hist: DataFrame, groupCols: Seq[String], path: String): Unit =
-    hist.select((groupCols.map(col) :+ col("bucket") :+ col("cnt")): _*)
-      .write.mode("overwrite").parquet(path)
-
-  def loadHist(spark: org.apache.spark.sql.SparkSession,
-               groupCols: Seq[String], path: String): DataFrame =
-    spark.read.parquet(newestGen(spark, path).map(_._2).getOrElse(path))
-      .select((groupCols.map(col) :+ col("bucket") :+ col("cnt")): _*)
-
-  // ---- two-level quantile sketch ----------------------------------------
-  //
-  // The log2 histogram's error is ~2× at bucket edges (the span
-  // [2^(b−1), 2^b−1] is interpolated as one linear segment). The
-  // two-level refinement splits every bucket into 2^sBits equal-width
-  // sub-buckets: (bucket, sub) with sub = floor((v − 2^(b−1)) / 2^shift),
-  // shift = max(b−1−sBits, 0) — state grows to ≤ 64·2^sBits rows per
-  // group (512 at the default sBits=3), error shrinks by the same 2^sBits
-  // factor, and the merge stays counter-ADD. All boundaries are powers of
-  // two, so the double math (pow/floor, division by an exact power of
-  // two) reproduces bit-for-bit cross-engine for integral values within
-  // double precision (|v| < 2^53 — far above any text-length/count
-  // column) — oracled end-to-end by q52 exactly like q47.
+  // both engines, which emit minimal-length binary strings), and each
+  // bucket splits into 2^sBits equal-width sub-buckets: (bucket, sub) with
+  // sub = floor((v − 2^(b−1)) / 2^shift), shift = max(b−1−sBits, 0).
+  // State is ≤ 64·2^sBits rows per group, the merge is counter-ADD, and a
+  // quantile reads off the cumulative counts with linear interpolation
+  // inside the (bucket, sub) segment. sBits = 0 is the plain log2
+  // histogram (q47, `len_hist`: every sub is 0, error ~2× at the bucket
+  // edges); the default sBits = 3 (q52) shrinks the in-bucket error 8×.
+  // All boundaries are powers of two, so the double math (pow/floor,
+  // division by an exact power of two) reproduces bit-for-bit cross-engine
+  // for integral values within double precision (|v| < 2^53 — far above
+  // any text-length/count column) — oracled end-to-end by q47 and q52.
 
   /** Two-level histogram of a non-negative integral column:
     * (group…, bucket, sub, cnt); bucket = bit_length(v) (0 for v ≤ 0,
     * with sub 0), sub = the value's 2^sBits-way split of the bucket. */
   def hist2Build(df: DataFrame, groupCols: Seq[String], valueCol: Column,
                  sBits: Int = 3): DataFrame = {
-    require(sBits >= 1 && sBits <= 6, s"sBits=$sBits out of range")
+    require(sBits >= 0 && sBits <= 6, s"sBits=$sBits out of range")
     val v = valueCol.cast("long")
     val b = when(v <= 0, lit(0)).otherwise(length(bin(v)))
     val staged = df.select(
@@ -576,125 +530,32 @@ object Sketch {
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** Associative two-level merge: ADD per (group, bucket, sub). */
-  def hist2Merge(a: DataFrame, b: DataFrame,
-                 groupCols: Seq[String]): DataFrame =
-    a.unionByName(b)
-      .groupBy((groupCols.map(col) :+ col("bucket") :+ col("sub")): _*)
-      .agg(sum(col("cnt")).as("cnt"))
-
-  /** Persist a two-level histogram (+ sBits on every row — the read-off
-    * needs it, so a mismatched load must fail loudly, as p for HLL). */
-  def saveHist2(hist: DataFrame, groupCols: Seq[String], sBits: Int,
-                path: String): Unit =
-    withParams(hist.select((groupCols.map(col) :+ col("bucket") :+
-      col("sub") :+ col("cnt")): _*), Seq("sbits" -> sBits))
-      .write.mode("overwrite").parquet(path)
-
-  /** Load a persisted two-level histogram; returns (hist, sBits).
-    * Resolves the newest fold generation when fold-owned. */
-  def loadHist2(spark: org.apache.spark.sql.SparkSession,
-                groupCols: Seq[String], path: String): (DataFrame, Int) = {
-    val src = newestGen(spark, path).map(_._2).getOrElse(path)
-    val df = spark.read.parquet(src)
-    val Seq(s) = readParams(df, path, Seq("sbits"))
-    (df.select((groupCols.map(col) :+ col("bucket") :+ col("sub") :+
-      col("cnt")): _*), s)
-  }
-
-  /** Group upsert for persisted two-level histograms — the batch-side
-    * replace-groups discipline of upsertHist, with the sBits check. */
-  def upsertHist2(spark: org.apache.spark.sql.SparkSession,
-                  groupCols: Seq[String], hist: DataFrame, sBits: Int,
-                  path: String): Unit = {
-    requireNotFoldOwned(spark, path)
-    val cols = groupCols.map(col) :+ col("bucket") :+ col("sub") :+ col("cnt")
-    val merged = if (!pathExists(spark, path)) hist.select(cols: _*) else {
-      val (old, oldS) = loadHist2(spark, groupCols, path)
-      require(oldS == sBits,
-        s"sketch at $path has sbits=$oldS, ingest has sbits=$sBits")
-      old.join(hist.select(groupCols.map(col): _*).distinct(),
-        groupCols, "left_anti").unionByName(hist.select(cols: _*))
-    }
-    saveHist2(merged.localCheckpoint(true), groupCols, sBits, path)
-  }
-
-  /** Streaming fold for two-level histograms — counter-ADD behind the
-    * same per-group high-water mark and generation commit as foldHist. */
-  def foldHist2(spark: org.apache.spark.sql.SparkSession,
-                groupCols: Seq[String], hist: DataFrame, sBits: Int,
-                path: String, batchId: Long): Unit = {
-    val cols = groupCols.map(col) :+ col("bucket") :+ col("sub") :+ col("cnt")
-    val stamped = hist.select(cols: _*)
-      .withColumn("folded_batch", lit(batchId))
-    val merged = foldCurrent(spark, path) match {
-      case None => stamped
-      case Some(df) =>
-        val Seq(oldS) = readParams(df, path, Seq("sbits"))
-        require(oldS == sBits,
-          s"sketch at $path has sbits=$oldS, fold has sbits=$sBits")
-        val old = withFoldMark(df).select((cols :+ col("folded_batch")): _*)
-        val (fresh, untouched, touchedOld) =
-          hwmFilter(old, stamped, groupCols, batchId)
-        untouched.unionByName(
-          hist2Merge(touchedOld.select(cols: _*), fresh.select(cols: _*),
-            groupCols)
-            .withColumn("folded_batch", lit(batchId)))
-    }
-    commitFoldGen(spark, path, batchId,
-      withParams(merged.localCheckpoint(true)
-        .select((cols :+ col("folded_batch")): _*), Seq("sbits" -> sBits)))
-  }
-
-  /** Quantile estimates from a (possibly merged) two-level histogram —
-    * the (n−1)·q convention of histQuantiles over the finer
-    * (bucket, sub) segments [lo + sub·2^shift, lo + (sub+1)·2^shift − 1].
-    * `sBits` must match the build (as p for HLL). */
+  /** Quantile estimates from a (possibly merged) histogram. For each
+    * (name, q): t = (n−1)·q; the (bucket, sub) segment
+    * [lo + sub·2^shift, lo + (sub+1)·2^shift − 1] with cum0 ≤ t < cum0+cnt
+    * yields lo' + (hi'−lo')·(t−cum0)/cnt — the same (n−1)·q rank
+    * convention as the exact percentile (q45), deterministic double math
+    * cross-engine. Output: (group…, docs, <name>…) with estimates rounded
+    * to 4. `sBits` must match the build (as p for HLL); at sBits = 0 the
+    * `Hist` layout (no sub column) reads as sub = 0. */
   def hist2Quantiles(hist: DataFrame, groupCols: Seq[String],
                      qs: Seq[(String, Double)], sBits: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val sub = if (hist.columns.contains("sub")) col("sub") else {
+      require(sBits == 0, s"a histogram without sub columns is sBits=0, not $sBits")
+      lit(0L)
+    }
     val w = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(col("bucket"), col("sub"))
+      .orderBy(col("bucket"), sub)
     val wAll = Window.partitionBy(groupCols.map(col): _*)
     val cnt = col("cnt").cast("double")
     val cum0 = (sum(col("cnt")).over(w) - col("cnt")).cast("double")
     val n = sum(col("cnt")).over(wAll).cast("double")
     val width = pow(lit(2.0), greatest(col("bucket") - 1 - sBits, lit(0)))
     val lo = when(col("bucket") <= 0, lit(0.0))
-      .otherwise(pow(lit(2.0), col("bucket") - 1) + col("sub") * width)
+      .otherwise(pow(lit(2.0), col("bucket") - 1) + sub * width)
     val hi = when(col("bucket") <= 0, lit(0.0))
-      .otherwise(pow(lit(2.0), col("bucket") - 1) +
-        (col("sub") + 1) * width - 1)
-    val staged = hist.select(
-      (groupCols.map(col) :+ cnt.as("__cnt") :+ cum0.as("__cum0") :+
-        n.as("__n") :+ lo.as("__lo") :+ hi.as("__hi")): _*)
-    val qAggs = qs.map { case (name, q) =>
-      val t = (col("__n") - 1) * q
-      max(when(col("__cum0") <= t && t < col("__cum0") + col("__cnt"),
-        round(col("__lo") + (col("__hi") - col("__lo")) *
-          ((t - col("__cum0")) / col("__cnt")), 4))).as(name)
-    }
-    staged.groupBy(groupCols.map(col): _*)
-      .agg(max(col("__n")).cast("long").as("docs"), qAggs: _*)
-  }
-
-  /** Quantile estimates from a (possibly merged) histogram. For each
-    * (name, q): t = (n−1)·q; the bucket with cum0 ≤ t < cum0+cnt yields
-    * lo + (hi−lo)·(t−cum0)/cnt — the same (n−1)·q rank convention as the
-    * exact percentile (q45), deterministic double math cross-engine.
-    * Output: (group…, docs, <name>…) with estimates rounded to 4. */
-  def histQuantiles(hist: DataFrame, groupCols: Seq[String],
-                    qs: Seq[(String, Double)]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(groupCols.map(col): _*).orderBy(col("bucket"))
-    val wAll = Window.partitionBy(groupCols.map(col): _*)
-    val cnt = col("cnt").cast("double")
-    val cum0 = (sum(col("cnt")).over(w) - col("cnt")).cast("double")
-    val n = sum(col("cnt")).over(wAll).cast("double")
-    val lo = when(col("bucket") <= 0, lit(0.0))
-      .otherwise(pow(lit(2.0), col("bucket") - 1))
-    val hi = when(col("bucket") <= 0, lit(0.0))
-      .otherwise(pow(lit(2.0), col("bucket")) - 1)
+      .otherwise(pow(lit(2.0), col("bucket") - 1) + (sub + 1) * width - 1)
     val staged = hist.select(
       (groupCols.map(col) :+ cnt.as("__cnt") :+ cum0.as("__cum0") :+
         n.as("__n") :+ lo.as("__lo") :+ hi.as("__hi")): _*)

@@ -88,16 +88,16 @@ object ExtractStream {
 
   /**
    * Continuous corpus profiling: the --profile-sketches leg lifted to
-   * streaming. Each micro-batch builds its sketches from the BATCH ROWS
-   * ALONE and folds them into the persisted per-day tables via the
-   * associative merges (Sketch.foldHll register-max / Sketch.foldHist
-   * counter-add) — O(batch) per trigger. A crawl day arriving across T
+   * streaming. Each micro-batch builds the Sketch.corpusProfile tables
+   * from the BATCH ROWS ALONE and folds them into the persisted per-day
+   * tables via the associative merges (Sketch.fold: register-max for
+   * hll_tokens, counter-add for len_hist) — O(batch) per trigger. A crawl day arriving across T
    * triggers costs T batch-sized folds, never T re-scans of the day's
    * earlier files (the r5 recompute-the-day shape was O(triggers × day)).
    * Replay idempotence comes from the per-day high-water mark each fold
    * persists inside the sketch table itself (a replayed batch id is
    * ≤ the mark and no-ops for already-folded days — counter-add would
-   * double-count exactly that replay without it; see Sketch.foldHist).
+   * double-count exactly that replay without it; see Sketch.fold).
    * Chain off extractQuery's output directory (as dedupIngestQuery).
    */
   def profileSketchQuery(spark: SparkSession, extractedDir: String,
@@ -114,20 +114,14 @@ object ExtractStream {
         col("extracted_text"))
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.pipeline.{Dedup, Sketch}
-        // one batch materialization feeds both sketch builds
-        val rows = batch.where(col("warc_day").isNotNull).localCheckpoint(true)
-        if (!rows.isEmpty) {
-          val toks = rows.select(col("warc_day"),
-            explode(Dedup.tokens(col("extracted_text"))).as("tok"))
-          Sketch.foldHll(spark, Seq("warc_day"),
-            Sketch.hllRegisters(toks, Seq("warc_day"), col("tok")),
-            p = 9, s"$sketchPath/hll_tokens", batchId)
-          Sketch.foldHist(spark, Seq("warc_day"),
-            Sketch.histBuild(rows, Seq("warc_day"),
-              length(col("extracted_text"))),
-            s"$sketchPath/len_hist", batchId)
-        }
+        import graft.pipeline.{Mat, Sketch}
+        // one batch materialization feeds every sketch build
+        val rows = Mat.small(batch.where(col("warc_day").isNotNull))
+        if (!rows.isEmpty)
+          Sketch.corpusProfile(rows).foreach { t =>
+            Sketch.fold(spark, t.family, t.groupCols, t.sketch, t.params,
+              s"$sketchPath/${t.name}", batchId)
+          }
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)

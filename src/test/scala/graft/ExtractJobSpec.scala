@@ -160,15 +160,17 @@ class ExtractJobSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val tmp = java.nio.file.Files.createTempDirectory("extractjobsketch").toString
     val sk = s"$tmp/sketches"
+    def loaded(f: Sketch.Family, table: String) =
+      Sketch.load(spark, f, Seq("warc_day"), s"$sk/$table")
     // page(i) timestamps step by 1h → ids 0..23 fill exactly one UTC day
     writePages(s"$tmp/pages", 0L until 24L)
     ExtractJob.run(spark, s"$tmp/pages", s"$tmp/out",
       partitions = 4, resume = false, profileSketchPath = Some(sk))
-    val (regs1, p1) = Sketch.loadHll(spark, Seq("warc_day"), s"$sk/hll_tokens")
+    val (regs1, Seq(p1)) = loaded(Sketch.Hll, "hll_tokens")
     assert(p1 == 9)
     val day1Regs = regs1.collect().map(_.toSeq).toSet
     assert(regs1.select("warc_day").distinct().count() == 1)
-    val hist1 = Sketch.loadHist(spark, Seq("warc_day"), s"$sk/len_hist")
+    val hist1 = loaded(Sketch.Hist, "len_hist")._1
     assert(hist1.agg(org.apache.spark.sql.functions.sum(col("cnt")))
       .head.getLong(0) == 24L)
 
@@ -177,19 +179,19 @@ class ExtractJobSpec extends AnyFunSuite {
     writePages(s"$tmp/pages", 0L until 30L)
     ExtractJob.run(spark, s"$tmp/pages", s"$tmp/out",
       partitions = 4, resume = true, profileSketchPath = Some(sk))
-    val (regs2, _) = Sketch.loadHll(spark, Seq("warc_day"), s"$sk/hll_tokens")
+    val (regs2, _) = loaded(Sketch.Hll, "hll_tokens")
     assert(regs2.select("warc_day").distinct().count() == 2)
-    val hist2rows = Sketch.loadHist(spark, Seq("warc_day"), s"$sk/len_hist")
-      .collect().map(_.toSeq).toSet
+    val hist2rows =
+      loaded(Sketch.Hist, "len_hist")._1.collect().map(_.toSeq).toSet
 
     // re-running the same resume (no-op delta) leaves both sketches
     // byte-identical — the group-replace discipline is idempotent
     ExtractJob.run(spark, s"$tmp/pages", s"$tmp/out",
       partitions = 4, resume = true, profileSketchPath = Some(sk))
-    val (regs3, _) = Sketch.loadHll(spark, Seq("warc_day"), s"$sk/hll_tokens")
+    val (regs3, _) = loaded(Sketch.Hll, "hll_tokens")
     assert(regs3.collect().map(_.toSeq).toSet ==
       regs2.collect().map(_.toSeq).toSet)
-    assert(Sketch.loadHist(spark, Seq("warc_day"), s"$sk/len_hist")
+    assert(loaded(Sketch.Hist, "len_hist")._1
       .collect().map(_.toSeq).toSet == hist2rows)
     // day-1 registers specifically survived the day-2 upsert untouched
     assert(regs2.collect().map(_.toSeq).toSet.intersect(day1Regs) == day1Regs)

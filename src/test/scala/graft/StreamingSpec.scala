@@ -142,6 +142,8 @@ class StreamingSpec extends AnyFunSuite {
     val pagesDir = s"$base/pages"
     val outDir = s"$base/extracted"
     val sk = s"$base/sk"
+    def loaded(f: Sketch.Family, table: String) =
+      Sketch.load(spark, f, Seq("warc_day"), s"$sk/$table")
 
     def page(i: Long): Page =
       Page(s"sk://doc/$i", new java.sql.Timestamp(1767225600000L + i * 3600L * 1000),
@@ -173,12 +175,13 @@ class StreamingSpec extends AnyFunSuite {
       all.select(col("warc_day"),
         explode(Dedup.tokens(col("extracted_text"))).as("tok")),
       Seq("warc_day"), col("tok")).collect().map(_.toSeq).toSet
-    val (gotHll, p) = Sketch.loadHll(spark, Seq("warc_day"), s"$sk/hll_tokens")
+    val (gotHll, Seq(p)) = loaded(Sketch.Hll, "hll_tokens")
     assert(p == 9)
     assert(gotHll.collect().map(_.toSeq).toSet == wantHll)
-    val wantHist = Sketch.histBuild(all, Seq("warc_day"),
-      length(col("extracted_text"))).collect().map(_.toSeq).toSet
-    assert(Sketch.loadHist(spark, Seq("warc_day"), s"$sk/len_hist")
+    val wantHist = Sketch.hist2Build(all, Seq("warc_day"),
+      length(col("extracted_text")), sBits = 0).drop("sub")
+      .collect().map(_.toSeq).toSet
+    assert(loaded(Sketch.Hist, "len_hist")._1
       .collect().map(_.toSeq).toSet == wantHist)
 
     // drop 3 proves the fold is INCREMENTAL — no re-read of the day's
@@ -203,16 +206,17 @@ class StreamingSpec extends AnyFunSuite {
       all3.select(col("warc_day"),
         explode(Dedup.tokens(col("extracted_text"))).as("tok")),
       Seq("warc_day"), col("tok")).collect().map(_.toSeq).toSet
-    val wantHist3 = Sketch.histBuild(all3, Seq("warc_day"),
-      length(col("extracted_text"))).collect().map(_.toSeq).toSet
+    val wantHist3 = Sketch.hist2Build(all3, Seq("warc_day"),
+      length(col("extracted_text")), sBits = 0).drop("sub")
+      .collect().map(_.toSeq).toSet
     oldDay1.foreach(f =>
       new java.io.FileOutputStream(f).close()) // truncate to 0 bytes
     ExtractStream.profileSketchQuery(spark, outDir, sk, s"$base/ckptS")
       .awaitTermination(120000)
-    assert(Sketch.loadHll(spark, Seq("warc_day"), s"$sk/hll_tokens")._1
+    assert(loaded(Sketch.Hll, "hll_tokens")._1
       .collect().map(_.toSeq).toSet == wantHll3,
       "day-1 registers must survive the earlier files' removal — the fold re-read them")
-    assert(Sketch.loadHist(spark, Seq("warc_day"), s"$sk/len_hist")
+    assert(loaded(Sketch.Hist, "len_hist")._1
       .collect().map(_.toSeq).toSet == wantHist3)
   }
 

@@ -231,6 +231,36 @@ class SubstringDedupSpec extends AnyFunSuite {
     assert(out == Seq((900L, 901L, 1.0)))
   }
 
+  test("spanContainmentJoin admits a pair whose containment ROUNDS to the " +
+    "threshold: 19,999 of 40,000 spans shared is 0.499975, which the " +
+    "verify rounds to 0.5, so the prefix must reach a shared span") {
+    // the smaller doc: a shared run of 20,006 tokens (19,999 shared
+    // 8-grams) then 20,001 own tokens (20,001 unshared 8-grams, boundary
+    // grams included) — m = 40,000 distinct spans. The larger doc puts
+    // 30,000 own tokens before the shared run, so its rarest-first prefix
+    // also holds only unshared spans. A prefix sized from ⌊0.5·m⌋ is
+    // 20,001 spans long: exactly the smaller doc's unshared spans, and
+    // the pair would never become a candidate.
+    val shared = uniq(7, 20006)
+    val small = s"$shared ${uniq(8, 20001)}"
+    val large = s"${uniq(9, 30000)} $shared"
+    val df = docsDf(Seq((1L, small), (2L, large)))
+    val out = Dedup.spanContainmentJoin(df, "doc_id", "text",
+      n = 8, minContainment = 0.5).collect()
+      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
+        r.getAs[Long]("shared_spans"), r.getAs[Double]("containment"))).toSeq
+    // brute force over the distinct 8-gram sets, rounded as the verify
+    def grams(text: String): Set[String] =
+      text.split(" ").sliding(8).map(_.mkString(" ")).toSet
+    val (g1, g2) = (grams(small), grams(large))
+    val sh = (g1 & g2).size
+    assert(g1.size == 40000 && sh == 19999)
+    val c = BigDecimal(sh.toDouble / math.min(g1.size, g2.size))
+      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(c == 0.5)
+    assert(out == Seq((1L, 2L, 19999L, 0.5)))
+  }
+
   test("stripDupSpans removes exactly the covered tokens, keeps the " +
     "rest in order; a fully-duplicated doc strips to empty") {
     val df = docsDf(Seq(
