@@ -14,8 +14,11 @@ import graft.pipeline.{Dedup, Dsir, LangModel, Quality, Sampling, TextOps}
  *   2. exact dedup fingerprint (md5 of normalized text) keep-first —
  *                  one shuffle on a 16-byte key
  *   3. near dedup  candidate pairs → connected components → keep each
- *                  cluster's min url (bucketed equi-joins + O(log d)
- *                  pointer doubling; ids only through every shuffle).
+ *                  cluster's min url (bucketed equi-joins, ids only
+ *                  through every shuffle; components by driver-side
+ *                  union-find while the pairs' id bytes fit the
+ *                  broadcast threshold, O(log d) pointer-doubling
+ *                  rounds above it).
  *                  `--near minhash` (default) banded MinHash-LSH;
  *                  `--near exact` the prefix-filtering set-similarity
  *                  join (PPJoin-family) — no false negatives at the
@@ -329,9 +332,13 @@ object CurateJob {
     // probabilistic recall, cheapest at web scale; `--near exact` the
     // prefix-filtering set-similarity join — NO false negatives at the
     // same verify threshold, for high-stakes corpora where a missed
-    // near-dup costs more than the extra prefix-postings shuffle. Both
-    // consumers of the exact-dedup output (shingling and the keep
-    // anti-join) read the durable stage_exact files.
+    // near-dup costs more than the extra prefix-postings shuffle. The
+    // pairs become clusters by Dedup.duplicateClusters: a driver-side
+    // union-find when their id bytes fit the session's broadcast
+    // threshold (the usual case: a few KB of urls), distributed
+    // pointer-doubling rounds above it. Both consumers of the
+    // exact-dedup output (shingling and the keep anti-join) read the
+    // durable stage_exact files.
     val (nearKeep, nNear) = stage(spark, s"$outDir/stage_near", resume) {
       val pairs = nearAlgo match {
         case "minhash" =>

@@ -1,7 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType,
+  LongType, ShortType, StringType, StructField, StructType, TimestampNTZType,
+  TimestampType}
 
 /**
  * Deduplication operators for web-scale corpora. All are expressed as
@@ -16,8 +22,9 @@ import org.apache.spark.sql.functions._
  *  - ngram:   blocked n-gram Jaccard (inverted-index style equi-join)
  *  - cosine:  embedding near-dup via random-hyperplane LSH buckets
  *
- * Everything is built-in Catalyst expressions (codegen'd); no Python, no
- * driver-side loops.
+ * Everything is built-in Catalyst expressions (codegen'd); no Python. The
+ * one driver-side loop is duplicateClusters' union-find, taken only when
+ * the observed edge list fits the session's broadcast threshold.
  */
 object Dedup {
 
@@ -1092,64 +1099,127 @@ object Dedup {
   // ---- duplicate clusters (connected components) -----------------------
 
   /**
-   * Collapse near-dup PAIRS into duplicate CLUSTERS: connected components
-   * by min-label propagation WITH pointer doubling. Each round every node
-   * (a) adopts the smallest label among itself and its neighbors, then
-   * (b) shortcuts to its label's own label (labels are always node ids, so
-   * the hop is an equi-join). Doubling makes convergence O(log diameter)
-   * rounds instead of O(diameter) — a 1000-node duplicate chain converges
-   * in ~10 rounds, not 1000. Each round is EXACTLY two bounded equi-join
-   * jobs over eagerly-checkpointed inputs (the expensive upstream pair
-   * generation is materialized once, never re-run): the convergence probe
-   * rides the shortcut job as an observed metric (CollectMetrics) instead
-   * of a third scan — at scale, driver cost is rounds × jobs, so the
-   * probe must not be its own job. The init aggregation already applies
-   * one propagation step (label₀ = min(id, min neighbor) — the same
-   * shuffle a distinct-nodes init pays), so the loop starts a round
-   * ahead (r8).
+   * Collapse near-dup PAIRS into duplicate CLUSTERS: connected components,
+   * labelled by the min id under Spark's ordering of the id type.
+   *
+   * The edges (both directions of every pair, from ONE scan of the pair
+   * source) are checkpointed once; that checkpoint job also observes the
+   * pairs' id bytes (strings by octet_length, fixed-width types by their
+   * default size), so sizing the graph costs no pass. The plan follows
+   * the observed size:
+   *  - at or below the session's `spark.sql.autoBroadcastJoinThreshold`
+   *    (the bound Spark already trusts to ship a relation to every
+   *    executor), the edges are collected and union-find runs on the
+   *    driver: one job, no rounds, always converges. The result is a
+   *    local relation. A negative threshold disables this branch.
+   *  - above it, min-label propagation with pointer doubling runs as
+   *    distributed rounds (`distributedComponents`); it fails loudly if
+   *    `maxIter` rounds do not converge.
    *
    * Input: pairs (id_a, id_b); output: (id, component) with component =
    * min id in the node's component.
    */
   def duplicateClusters(pairs: DataFrame, maxIter: Int = 15): DataFrame = {
-    // ONE scan of the (typically expensive — q26 feeds the whole capped-
-    // Jaccard pipeline in here) pair source: both edge directions come
-    // from a single generate over each pair row, where the old
-    // union(pairs, pairs.reversed) evaluated the pair subtree twice. No
-    // distinct either: min-label propagation is duplicate-edge-
-    // insensitive (neighborMin is a min aggregate), so the dedup shuffle
-    // bought nothing (r8).
+    // No distinct on the edges: min-label propagation and union-find are
+    // both duplicate-edge-insensitive, so the dedup shuffle bought
+    // nothing (r8).
     // edges are STATIC across rounds but re-joined every round on dst:
     // hash-partition + sort them by dst BEFORE the checkpoint
     // (Dataset.checkpoint preserves outputPartitioning/outputOrdering
-    // through LogicalRDD), so in the SORT-MERGE regime — corpus-scale
-    // labels that exceed the broadcast threshold — each round's
+    // through LogicalRDD), so in the SORT-MERGE regime each round's
     // edges⋈labels join needs neither an exchange nor a sort on the
-    // edges side, the big side of the per-round work (r8). At toy scale
-    // this is inert (measured: the checkpointed labels auto-broadcast,
-    // so edges were never shuffled per round anyway) and costs one
-    // extra small exchange at build time. Partition count from the
-    // session's shuffle.partitions: scale-adaptive, never a local
-    // constant.
-    val nPart = pairs.sparkSession.sessionState.conf.numShufflePartitions
+    // edges side (r8). Partition count from the session's
+    // shuffle.partitions: scale-adaptive, never a local constant.
+    val conf = pairs.sparkSession.sessionState.conf
+    val idType = pairs.schema("id_a").dataType
+    val idBytes = idType match {
+      case _: StringType => octet_length(col("src")).cast("long")
+      case t => lit(t.defaultSize.toLong)
+    }
+    val size = new Observation("cc_edges")
     val edges = Mat.corpus(
       pairs.select(explode(array(
           struct(col("id_a").as("src"), col("id_b").as("dst")),
           struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .repartition(nPart, col("dst"))
+        .observe(size, count(lit(1)).as("n"),
+          coalesce(sum(idBytes), lit(0L)).as("bytes"))
+        .repartition(conf.numShufflePartitions, col("dst"))
         .sortWithinPartitions(col("dst")))
-    // init = min(id, min direct neighbor): the same shuffle the plain
-    // distinct-nodes init paid (groupBy src ≡ distinct src), but it
-    // absorbs round 1's whole propagation step — the loop starts one
-    // round ahead (r8)
+    // every pair contributes its two ids once as a src: the sum is the
+    // pair list's id bytes
+    val observed = size.get
+    if (driverKeyed(idType) &&
+        observed("bytes").asInstanceOf[Long] <= conf.autoBroadcastJoinThreshold)
+      driverComponents(edges, idType)
+    else distributedComponents(edges, observed("n").asInstanceOf[Long], maxIter)
+  }
+
+  /** Id types whose catalyst values are JVM-equal exactly when Spark
+    * groups them together, so union-find can key a HashMap by them (not
+    * binary: arrays compare by reference; not floats: NaN ≠ NaN on the
+    * JVM; not collations without binary equality). Any other id type
+    * takes the distributed rounds at every size. */
+  private def driverKeyed(t: DataType): Boolean = t match {
+    case StringType => true // the default UTF8_BINARY collation only
+    case ByteType | ShortType | IntegerType | LongType | DateType |
+         TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+
+  /** Union-find over the collected edges; every root is its component's
+    * min under Spark's ordering of `idType` (for strings UTF8String byte
+    * order, which differs from String.compareTo on non-BMP code points),
+    * because a union always hangs the larger root under the smaller. */
+  private def driverComponents(edges: DataFrame, idType: DataType): DataFrame = {
+    val ord = PhysicalDataType.ordering(idType)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var a = x
+      while (parent(a) != a) { val g = parent(parent(a)); parent(a) = g; a = g }
+      a
+    }
+    // one direction suffices; `<=` keeps self-pairs
+    edges.where(col("src") <= col("dst")).collect().foreach { r =>
+      val a = toCatalyst(r.get(0))
+      val b = toCatalyst(r.get(1))
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    val rows = parent.keys.toVector.map(k => Row(toScala(k), toScala(find(k))))
+    edges.sparkSession.createDataFrame(rows.asJava,
+      StructType(Seq(StructField("id", idType), StructField("component", idType))))
+  }
+
+  /**
+   * Min-label propagation WITH pointer doubling. Each round every node
+   * (a) adopts the smallest label among itself and its neighbors, then
+   * (b) shortcuts to its label's own label (labels are always node ids, so
+   * the hop is an equi-join). Doubling makes convergence O(log diameter)
+   * rounds instead of O(diameter) — a 1000-node duplicate chain converges
+   * in ~10 rounds, not 1000. Each round is EXACTLY two bounded equi-join
+   * jobs over eagerly-checkpointed inputs: the convergence probe rides
+   * the shortcut job as an observed metric (CollectMetrics) instead of a
+   * third scan — at scale, driver cost is rounds × jobs, so the probe
+   * must not be its own job. The init aggregation already applies one
+   * propagation step (label₀ = min(id, min neighbor) — the same shuffle a
+   * distinct-nodes init pays), so the loop starts a round ahead (r8).
+   * Throws IllegalStateException when round `maxIter` still changed a
+   * label: unconverged labels would silently split clusters.
+   */
+  private def distributedComponents(edges: DataFrame, nEdges: Long,
+                                    maxIter: Int): DataFrame = {
     var labels = Mat.corpus(edges.groupBy(col("src"))
       .agg(min(col("dst")).as("nbmin"))
       .select(col("src").as("id"),
         least(col("src"), col("nbmin")).as("component")))
     var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    var changed = -1L
+    while (iter < maxIter && changed != 0L) {
       val neighborMin = edges
         .join(labels.withColumnRenamed("id", "dst2").withColumnRenamed("component", "nc"),
           col("dst") === col("dst2"))
@@ -1171,7 +1241,7 @@ object Dedup {
       // tried and REVERTED — ReuseExchange does not fire across the
       // self-join's two prop references (0 reused of 9 exchanges
       // measured), so the fusion re-ran every join twice.)
-      val obs = new org.apache.spark.sql.Observation(s"cc_changed_$iter")
+      val obs = new Observation(s"cc_changed_$iter")
       val shortcut = Mat.corpus(propM.alias("p")
         .join(propM.select(col("id").as("cid"), col("component").as("cc")).alias("c"),
           col("p.component") === col("c.cid"), "left")
@@ -1182,10 +1252,14 @@ object Dedup {
         .observe(obs, coalesce(sum(col("changed").cast("long")), lit(0L)).as("n"))
         .select(col("id"), col("component")))
       // metric is available once the eager checkpoint job finishes
-      converged = obs.getAsJava.get("n").asInstanceOf[Long] == 0L
+      changed = obs.get("n").asInstanceOf[Long]
       labels = shortcut
       iter += 1
     }
+    if (changed != 0L)
+      throw new IllegalStateException(s"duplicateClusters did not converge " +
+        s"within maxIter=$maxIter rounds over $nEdges edges: the last round " +
+        s"still changed $changed labels")
     labels
   }
 

@@ -70,9 +70,9 @@ object TextOps {
    * symbol boundaries, and DuckDB's replace() has the same
    * non-overlapping-leftmost semantics, so the loop is oracle-able for a
    * fixed round count (q48). Pieces containing the delimiter codepoints
-   * are dropped. Same bounded-iteration discipline as
-   * Dedup.duplicateClusters: localCheckpoint each round caps lineage;
-   * driver state is one (pair, count) row per round.
+   * are dropped. Same bounded-iteration discipline as the distributed
+   * regime of Dedup.duplicateClusters: a checkpoint each round caps
+   * lineage; driver state is one (pair, count) row per round.
    * Returns (round, left_sym, right_sym, pair_count), round 1-based;
    * stops early when no adjacent pair remains.
    */

@@ -11,9 +11,9 @@ import graft.pipeline.{Dedup, Mat}
   * through `Dataset.checkpoint` — re-readable after executor loss on a
   * real cluster — and every pipeline produces IDENTICAL output to the
   * local-checkpoint (sandbox) mode. Also pins that an `observe`d metric
-  * still fires through a reliable checkpoint: duplicateClusters'
-  * convergence probe rides the checkpoint job, and a silent non-firing
-  * would hang or mis-converge the loop. */
+  * still fires through a reliable checkpoint: duplicateClusters' edge
+  * size and convergence probe ride checkpoint jobs, and a silent
+  * non-firing would hang the call. */
 class MatSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSessionFixture.spark
@@ -68,12 +68,16 @@ class MatSpec extends AnyFunSuite {
   test("reliable mode: duplicateClusters' observed convergence metric " +
     "fires through Dataset.checkpoint — a 60-node chain still collapses " +
     "to its min id within the pointer-doubling round budget") {
-    val chain = (0L until 59L).map(i => (i, i + 1))
-    val pairs = chain.toDF("id_a", "id_b")
-    val base = canon(Dedup.duplicateClusters(pairs))
-    assert(base.forall(_(1) == 0L), "chain must collapse to component 0")
-    withCheckpointDir { _ =>
-      assert(canon(Dedup.duplicateClusters(pairs)) == base)
+    // both regimes: the edge-size observation rides the edge checkpoint
+    // in each, the convergence probe every distributed round
+    SparkSessionFixture.forBothComponentBranches { s =>
+      import s.implicits._
+      val pairs = (0L until 59L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val base = canon(Dedup.duplicateClusters(pairs))
+      assert(base.forall(_(1) == 0L), "chain must collapse to component 0")
+      withCheckpointDir { _ =>
+        assert(canon(Dedup.duplicateClusters(pairs)) == base)
+      }
     }
   }
 }

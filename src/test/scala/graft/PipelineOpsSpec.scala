@@ -194,39 +194,143 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(uncapped.count() == 66) // explicit opt-out still available
   }
 
+  // every duplicateClusters test runs under both regimes (threshold −1:
+  // distributed rounds; Long.MaxValue: driver union-find)
+  import SparkSessionFixture.forBothComponentBranches
+
+  private def labels(df: org.apache.spark.sql.DataFrame): Map[Any, Any] =
+    df.collect().map(r => r.get(0) -> r.get(1)).toMap
+
   test("duplicate clusters: chained pairs collapse to min-id components") {
-    import spark.implicits._
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 7L))
-      .toDF("id_a", "id_b")
-    val out = Dedup.duplicateClusters(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L, 10L -> 10L, 11L -> 10L))
+    forBothComponentBranches { s =>
+      import s.implicits._
+      val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 7L))
+        .toDF("id_a", "id_b")
+      assert(labels(Dedup.duplicateClusters(pairs)) ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L, 10L -> 10L, 11L -> 10L))
+    }
   }
 
   test("duplicate clusters: duplicated and reversed pair rows yield the " +
     "same components (min-label propagation is duplicate-edge-insensitive " +
     "— the r8 edges build drops the dedup shuffle)") {
-    import spark.implicits._
-    val pairs = Seq((1L, 2L), (2L, 3L), (1L, 2L), (2L, 1L), (10L, 11L))
-      .toDF("id_a", "id_b")
-    val out = Dedup.duplicateClusters(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    forBothComponentBranches { s =>
+      import s.implicits._
+      val pairs = Seq((1L, 2L), (2L, 3L), (1L, 2L), (2L, 1L), (10L, 11L))
+        .toDF("id_a", "id_b")
+      assert(labels(Dedup.duplicateClusters(pairs)) ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    }
   }
 
   test("duplicate clusters on empty pair input: empty result, no crash") {
-    import spark.implicits._
-    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(Dedup.duplicateClusters(empty).count() == 0)
+    forBothComponentBranches { s =>
+      import s.implicits._
+      val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+      assert(Dedup.duplicateClusters(empty).count() == 0)
+    }
   }
 
   test("duplicate clusters converge on a 200-node chain (pointer doubling: " +
     "O(log d) rounds, not O(d))") {
-    import spark.implicits._
+    forBothComponentBranches { s =>
+      import s.implicits._
+      val chain = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val out = Dedup.duplicateClusters(chain).collect()
+      assert(out.length == 200)
+      assert(out.forall(_.getLong(1) == 0L)) // diameter 199 >> maxIter 15
+    }
+  }
+
+  test("duplicate clusters: the distributed rounds fail loudly when " +
+    "maxIter rounds do not converge") {
+    val s = SparkSessionFixture.sessionAtBroadcastThreshold(-1L)
+    import s.implicits._
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val out = Dedup.duplicateClusters(chain).collect()
-    assert(out.length == 200)
-    assert(out.forall(_.getLong(1) == 0L)) // diameter 199 >> maxIter 15
+    val e = intercept[IllegalStateException](
+      Dedup.duplicateClusters(chain, maxIter = 2))
+    assert(e.getMessage.contains("maxIter=2"), e.getMessage)
+    assert(e.getMessage.matches(".*still changed [1-9][0-9]* labels.*"), e.getMessage)
+  }
+
+  test("duplicate clusters: both regimes give identical labels on seeded " +
+    "random graphs (Long and String ids)") {
+    // string ids mix 1-, 2-, 3- and 4-byte UTF-8 code points, so UTF-16
+    // order (String.compareTo) and Spark's byte order disagree often
+    val alphabet = Seq("a", "z", "\u00e9", "\uFF21", "\uFFFF", "\uD83D\uDE00")
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val edges = Seq.fill(70)((rnd.nextInt(90).toLong, rnd.nextInt(90).toLong))
+      val name = (0 until 90).map(_ => Seq.fill(1 + rnd.nextInt(3))(
+        alphabet(rnd.nextInt(alphabet.length))).mkString).toVector
+      def run(t: Long): (Map[Any, Any], Map[Any, Any]) = {
+        val s = SparkSessionFixture.sessionAtBroadcastThreshold(t)
+        import s.implicits._
+        (labels(Dedup.duplicateClusters(edges.toDF("id_a", "id_b"))),
+          labels(Dedup.duplicateClusters(edges.map { case (a, b) =>
+            (name(a.toInt), name(b.toInt)) }.toDF("id_a", "id_b"))))
+      }
+      val Seq(distributed, driver) = SparkSessionFixture.ComponentThresholds.map(run)
+      assert(distributed._1.nonEmpty && distributed._2.nonEmpty)
+      assert(driver == distributed, s"seed $seed")
+    }
+  }
+
+  test("duplicate clusters: a string component is the min in Spark's " +
+    "UTF8String byte order, not String.compareTo (non-BMP ids)") {
+    val (bmp, astral) = ("\uFFFF", "\uD83D\uDE00") // EF BF BF < F0 9F 98 80
+    assert(astral.compareTo(bmp) < 0) // UTF-16 order says the opposite
+    forBothComponentBranches { s =>
+      import s.implicits._
+      val pairs = Seq((astral, bmp), ("\uFFFF\u0041", astral)).toDF("id_a", "id_b")
+      assert(labels(Dedup.duplicateClusters(pairs)) ==
+        Map(bmp -> bmp, astral -> bmp, "\uFFFF\u0041" -> bmp))
+    }
+  }
+
+  test("duplicate clusters: binary ids (JVM equality by reference) keep " +
+    "their components at any threshold") {
+    forBothComponentBranches { s =>
+      import s.implicits._
+      val pairs = Seq((Array[Byte](1), Array[Byte](2)), (Array[Byte](2), Array[Byte](3)))
+        .toDF("id_a", "id_b")
+      val out = Dedup.duplicateClusters(pairs).collect()
+        .map(r => r.getAs[Array[Byte]](0).toSeq -> r.getAs[Array[Byte]](1).toSeq).toMap
+      assert(out == Map(Seq[Byte](1) -> Seq[Byte](1), Seq[Byte](2) -> Seq[Byte](1),
+        Seq[Byte](3) -> Seq[Byte](1)))
+    }
+  }
+
+  test("duplicate clusters: the driver regime starts at most 3 Spark jobs " +
+    "on an in-memory pair frame") {
+    // measured on this 40-node chain: driver union-find 3 jobs (edge
+    // shuffle, edge checkpoint, collect); distributed rounds 44 jobs
+    // (threshold −1 also makes every join a sort-merge join)
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    def jobsOf(t: Long): Int = {
+      val s = SparkSessionFixture.sessionAtBroadcastThreshold(t)
+      import s.implicits._
+      val chain = (0L until 39L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.GraftListenerBusDrain.drain(sc)
+      sc.addSparkListener(listener)
+      try Dedup.duplicateClusters(chain)
+      finally {
+        org.apache.spark.GraftListenerBusDrain.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+      jobs.get
+    }
+    val Seq(distributed, driver) = SparkSessionFixture.ComponentThresholds.map(jobsOf)
+    info(s"distributed $distributed jobs, driver $driver jobs")
+    assert(driver <= 3, s"driver regime started $driver jobs")
+    assert(driver < distributed)
   }
 
   test("brute knn: duplicate vector is its own nearest neighbor at cos 1") {

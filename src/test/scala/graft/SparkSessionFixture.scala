@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Assertions.withClue
 
 object SparkSessionFixture {
   lazy val spark: SparkSession = {
@@ -15,4 +16,23 @@ object SparkSessionFixture {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** A session on the shared context whose
+    * `spark.sql.autoBroadcastJoinThreshold` is `bytes`; the shared
+    * session's conf is left alone. */
+  def sessionAtBroadcastThreshold(bytes: Long): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", bytes)
+    s
+  }
+
+  /** The thresholds that force each of duplicateClusters' regimes: −1
+    * the distributed rounds, Long.MaxValue the driver union-find. */
+  val ComponentThresholds: Seq[Long] = Seq(-1L, Long.MaxValue)
+
+  /** Runs `body` once per regime, in a session at that threshold. */
+  def forBothComponentBranches(body: SparkSession => Unit): Unit =
+    ComponentThresholds.foreach { t =>
+      withClue(s"autoBroadcastJoinThreshold=$t: ")(body(sessionAtBroadcastThreshold(t)))
+    }
 }
