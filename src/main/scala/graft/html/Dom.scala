@@ -82,6 +82,16 @@ final class AttrMap {
     if (idIdx == i) idIdx = -1 else if (idIdx > i) idIdx -= 1
   }
 
+  /** Replaces in place every non-null value whose key is in `keys` —
+    * one pass over the slots instead of one probe per key. */
+  def transformValues(keys: collection.Set[String])(f: String => String): Unit = {
+    var i = 0
+    while (i < n) {
+      if (vs(i) != null && keys.contains(ks(i))) vs(i) = f(vs(i))
+      i += 1
+    }
+  }
+
   def foreach[U](f: ((String, String)) => U): Unit = {
     var i = 0
     while (i < n) { f((ks(i), vs(i))); i += 1 }

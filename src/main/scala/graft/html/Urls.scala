@@ -20,42 +20,54 @@ object Urls {
     }
   }
 
+  /** `url[0, end)` matches `[A-Za-z][A-Za-z0-9+.-]*` — a char loop, not
+    * String.matches, which compiles the pattern on every call. */
+  private def isScheme(url: String, end: Int): Boolean = {
+    def alpha(c: Char) = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
+    if (end <= 0 || !alpha(url.charAt(0))) return false
+    var i = 1
+    while (i < end) {
+      val c = url.charAt(i)
+      if (!(alpha(c) || (c >= '0' && c <= '9') || c == '+' || c == '.' || c == '-'))
+        return false
+      i += 1
+    }
+    true
+  }
+
+  /** urlsplit by index: each component is cut from `url` once. After the
+    * fragment and query are cut, the netloc can only end at a '/'. */
   private def split(url: String): Split = {
-    var rest = url
+    var end = url.length
     var fragment: String = null
-    val hi = rest.indexOf('#')
-    if (hi >= 0) { fragment = rest.substring(hi + 1); rest = rest.substring(0, hi) }
+    val hi = url.indexOf('#')
+    if (hi >= 0) { fragment = url.substring(hi + 1); end = hi }
     var query: String = null
-    val qi = rest.indexOf('?')
-    if (qi >= 0) { query = rest.substring(qi + 1); rest = rest.substring(0, qi) }
+    val qi = url.indexOf('?')
+    if (qi >= 0 && qi < end) { query = url.substring(qi + 1, end); end = qi }
+    var start = 0
     var scheme: String = null
-    val ci = rest.indexOf(':')
-    if (ci > 0 && rest.substring(0, ci).matches("[A-Za-z][A-Za-z0-9+.-]*")) {
-      scheme = rest.substring(0, ci).toLowerCase(java.util.Locale.ROOT)
-      rest = rest.substring(ci + 1)
+    val ci = url.indexOf(':')
+    if (ci > 0 && ci < end && isScheme(url, ci)) {
+      scheme = url.substring(0, ci).toLowerCase(java.util.Locale.ROOT)
+      start = ci + 1
     }
     var netloc: String = null
-    if (rest.startsWith("//")) {
-      var end = rest.length
-      var k = 2
-      var found = false
-      while (k < rest.length && !found) {
-        val c = rest.charAt(k)
-        if (c == '/' || c == '?' || c == '#') { end = k; found = true }
-        k += 1
-      }
-      netloc = rest.substring(2, end)
-      rest = rest.substring(end)
+    if (url.startsWith("//", start)) {
+      val slash = url.indexOf('/', start + 2)
+      val netEnd = if (slash >= 0 && slash < end) slash else end
+      netloc = url.substring(start + 2, netEnd)
+      start = netEnd
     }
-    Split(scheme, netloc, rest, query, fragment)
+    Split(scheme, netloc, url.substring(start, end), query, fragment)
   }
 
   private def removeDotSegments(path: String): String = {
-    if (path.isEmpty) return path
+    // a '.' or '..' segment starts the path or follows a '/'
+    if (!path.startsWith(".") && path.indexOf("/.") < 0) return path
     val segs = path.split("/", -1).toList
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     val absolute = path.startsWith("/")
-    var i = 0
     val n = segs.length
     segs.zipWithIndex.foreach { case (seg, idx) =>
       seg match {
@@ -70,42 +82,46 @@ object Urls {
           if (idx == n - 1) out += ""
         case s => out += s
       }
-      i += 1
     }
     var res = out.mkString("/")
     if (absolute && !res.startsWith("/")) res = "/" + res
     res
   }
 
+  /** A non-empty base URL split once, for joining every link of a
+    * document against it. */
+  private final class Base(val raw: String) {
+    val b: Split = split(raw)
+    // the directory a relative path merges into
+    val dir: String = {
+      val bp = if (b.netloc != null && b.path.isEmpty) "/" else b.path
+      bp.substring(0, bp.lastIndexOf('/') + 1)
+    }
+  }
+
   /** Python urljoin(base, url). */
-  def urljoin(base: String, url: String): String = {
-    if (base == null || base.isEmpty) return url
-    if (url == null || url.isEmpty) return base
-    val b = split(base)
-    val r0 = split(url)
+  def urljoin(base: String, url: String): String =
+    if (base == null || base.isEmpty) url else join(new Base(base), url)
+
+  private def join(base: Base, url: String): String = {
+    if (url == null || url.isEmpty) return base.raw
+    val b = base.b
+    val r = split(url)
     // Python: a relative ref with the SAME scheme is still treated as relative
-    val r = if (r0.scheme != null && r0.scheme != b.scheme) return url
-            else r0.copy(scheme = b.scheme)
-    if (r.netloc != null) return r.copy(scheme = b.scheme).unsplit
-    if (r.path.isEmpty && r.query == null) {
-      // only fragment (or nothing) — keep base path/query
-      return Split(b.scheme, b.netloc, b.path, b.query, r.fragment).unsplit
-    }
+    if (r.scheme != null && r.scheme != b.scheme) return url
+    if (r.netloc != null) return Split(b.scheme, r.netloc, r.path, r.query, r.fragment).unsplit
     if (r.path.isEmpty) {
-      return Split(b.scheme, b.netloc, b.path, r.query, r.fragment).unsplit
+      // only query and/or fragment — keep the base path (and its query
+      // when the reference has none)
+      val q = if (r.query == null) b.query else r.query
+      return Split(b.scheme, b.netloc, b.path, q, r.fragment).unsplit
     }
-    val mergedPath =
-      if (r.path.startsWith("/")) r.path
-      else {
-        val bp = if (b.netloc != null && b.path.isEmpty) "/" else b.path
-        val cut = bp.lastIndexOf('/')
-        (if (cut >= 0) bp.substring(0, cut + 1) else "") + r.path
-      }
+    val mergedPath = if (r.path.startsWith("/")) r.path else base.dir + r.path
     Split(b.scheme, b.netloc, removeDotSegments(mergedPath), r.query, r.fragment).unsplit
   }
 
   /** Attributes lxml's iterlinks covers that matter for Common-Crawl HTML. */
-  private val LinkAttrs = List(
+  private val LinkAttrs: Set[String] = Set(
     "href", "src", "action", "archive", "background", "cite", "classid",
     "codebase", "data", "icon", "longdesc", "manifest", "poster", "profile",
     "usemap")
@@ -124,16 +140,16 @@ object Urls {
       if (b.parent != null) b.dropTree()
     }
     if (docBase != null) applyBase(root, docBase)
-    if (baseHref != null && baseHref.nonEmpty) applyBase(root, baseHref)
+    if (baseHref != null) applyBase(root, baseHref)
   }
 
   private def applyBase(root: Node, base: String): Unit = {
+    if (base.isEmpty) return // urljoin("", v) == v
+    val b = new Base(base)
     def walk(n: Node): Unit = {
-      LinkAttrs.foreach { a =>
-        val v = n.attrs.getOrElse(a, null)
-        if (v != null) n.attrs(a) = urljoin(base, v)
-      }
-      n.children.foreach(walk)
+      n.attrs.transformValues(LinkAttrs)(join(b, _))
+      var i = 0
+      while (i < n.children.length) { walk(n.children(i)); i += 1 }
     }
     walk(root)
   }

@@ -11,7 +11,18 @@ import graft.extract.{Extracted, Extractor, Page}
  *   scan pages (column-pruned, partition-pruned)
  *     → salted repartition (one shuffle; skew policy in Salting)
  *     → typed map Extractor.extract (whole-stage-codegen'd MapElements)
- *     → partitioned Parquet write of Extracted rows (map-side)
+ *     → REBALANCE on warc_day (AQE only; see below)
+ *     → partitioned Parquet write of Extracted rows
+ *
+ * The salted shuffle sends every crawl day to every task, so a write
+ * straight off the map opens one Parquet file per (task, day). The
+ * rebalance hint between the map and the write gives each write task
+ * whole days instead: AQE coalesces small days and splits a large one at
+ * spark.sql.adaptive.advisoryPartitionSizeInBytes, so a one-day ingest
+ * still writes in parallel. The hint sits ABOVE the extraction map, so
+ * extraction stays in the salted stage; it costs one shuffle of the
+ * output rows. With AQE off Spark drops the hint and the write is
+ * map-side, as before.
  *
  * Resumability: `--resume` left-anti-joins the input against the urls
  * already present in the output (done-manifest) and appends only the
@@ -141,9 +152,9 @@ object ExtractJob {
         .select(PageTableIO.ExtractColumns.map(col): _*)
 
     var priorOutput = false
-    if (resume) {
-      val done = doneManifest(spark, outDir)
-      if (done != null) { priorOutput = true; input = input.join(done, Seq("url"), "left_anti") }
+    if (resume) doneManifest(spark, outDir).foreach { done =>
+      priorOutput = true
+      input = input.join(done, Seq("url"), "left_anti")
     }
 
     val pages: Dataset[Page] = Salting.saltedRepartition(input, partitions)
@@ -180,7 +191,14 @@ object ExtractJob {
         }
       }
 
+    // the observation sits ABOVE the rebalance, in the write stage: when
+    // AQE finds the rebalanced stage empty (a no-op resume) it replaces
+    // the plan below the write with an empty relation, and a
+    // CollectMetrics below the rebalance would drop out of the final
+    // plan with its metrics
     val out = extracted.toDF()
+      .withColumn("warc_day", to_date(col("warc_ts")))
+      .hint("rebalance", col("warc_day"))
       .observe(obs,
         count(lit(1)).as("docs"),
         coalesce(sum(when(col("status") === "ok", 1L).otherwise(0L)), lit(0L)).as("ok_docs"),
@@ -192,9 +210,8 @@ object ExtractJob {
         // --profile-sketches derives its touched days from these instead
         // of re-scanning the input (a --warc input would re-parse the
         // whole drop just to list days)
-        min(to_date(col("warc_ts"))).as("min_warc_day"),
-        max(to_date(col("warc_ts"))).as("max_warc_day"))
-      .withColumn("warc_day", to_date(col("warc_ts")))
+        min(col("warc_day")).as("min_warc_day"),
+        max(col("warc_day")).as("max_warc_day"))
 
     out.write
       .mode(if (priorOutput) SaveMode.Append else SaveMode.Overwrite)
@@ -379,12 +396,24 @@ object ExtractJob {
     finally out.close()
   }
 
-  /** Done-manifest: urls already extracted (null when no prior output). */
-  def doneManifest(spark: SparkSession, outDir: String): DataFrame = {
-    try {
-      spark.read.parquet(s"$outDir/extracted").select("url").distinct()
-    } catch {
-      case _: Throwable => null
-    }
+  /** Done-manifest: urls already extracted, None when there is no prior
+    * output. Absence is decided through the FileSystem, as dedupIngest
+    * decides it: a missing `extracted/`, or one holding no data files
+    * (only hidden/metadata entries such as an aborted run's _temporary),
+    * is no prior output. Any other read failure propagates — classifying
+    * an unreadable `extracted/` as absent would turn the resume into an
+    * Overwrite that deletes the prior output. */
+  def doneManifest(spark: SparkSession, outDir: String): Option[DataFrame] = {
+    val dir = new org.apache.hadoop.fs.Path(s"$outDir/extracted")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // hidden entries are skipped as Spark's file index skips them
+    def hasDataFile(p: org.apache.hadoop.fs.Path): Boolean =
+      fs.listStatus(p).exists { st =>
+        val name = st.getPath.getName
+        !name.startsWith("_") && !name.startsWith(".") &&
+          (!st.isDirectory || hasDataFile(st.getPath))
+      }
+    if (!fs.exists(dir) || !hasDataFile(dir)) None
+    else Some(spark.read.parquet(dir.toString).select("url").distinct())
   }
 }

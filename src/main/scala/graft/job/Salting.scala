@@ -14,7 +14,10 @@ import org.apache.spark.sql.functions._
  * whose html exceeds `bigBytes` additionally spread across the full salt
  * space by a second hash term, so giant rows from one host/day cannot
  * co-locate. The subsequent map stage is then balanced by *bytes*, not
- * rows. One shuffle total — the output write is map-side.
+ * rows. This is the job's only shuffle of the input; ExtractJob adds one
+ * more, of the extracted OUTPUT rows, when AQE is on: a rebalance on
+ * warc_day above the extraction map, so the write opens one file per day
+ * rather than one per (task, day). The salt keeps balancing extraction.
  *
  * AQE (on by default in Spark 4) further rebalances the shuffle blocks at
  * runtime; this salt just guarantees AQE has splittable keys to work with.

@@ -8,14 +8,14 @@ import graft.job.{ExtractJob, PageTableIO}
 /**
  * End-to-end spec for the production extraction job (ExtractJob.run):
  * fresh run, observed-metrics row count (no output re-read), metrics +
- * lineage sinks, and checkpointed resume (delta-only append, exactly-once
- * per url).
+ * lineage sinks, one part file per crawl day, and checkpointed resume
+ * (delta-only append, exactly-once per url, an unreadable prior output
+ * fails the job instead of being overwritten).
  */
-class ExtractJobSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSessionFixture.spark
-
-  private def page(i: Long): Page = {
+object ExtractJobSpec {
+  /** Page i is stamped i hours after 2026-01-01T00:00Z, so ids 0..23
+    * fill exactly one UTC day. */
+  def page(i: Long): Page = {
     val html =
       s"""<html><head><title>Doc $i</title></head><body>
          |<div class="article"><p>Paragraph text for document $i, with some
@@ -25,10 +25,20 @@ class ExtractJobSpec extends AnyFunSuite {
       html.getBytes(java.nio.charset.StandardCharsets.UTF_8), "", "")
   }
 
-  private def writePages(dir: String, ids: Seq[Long]): Unit = {
+  def writePages(spark: org.apache.spark.sql.SparkSession, dir: String,
+                 ids: Seq[Long]): Unit = {
     import spark.implicits._
     PageTableIO.write(spark.createDataset(ids.map(page)).toDF(), dir, numBuckets = 4)
   }
+}
+
+class ExtractJobSpec extends AnyFunSuite {
+  import ExtractJobSpec._
+
+  private lazy val spark = SparkSessionFixture.spark
+
+  private def writePages(dir: String, ids: Seq[Long]): Unit =
+    ExtractJobSpec.writePages(spark, dir, ids)
 
   test("fresh run: observed-metric count, metrics sink, lineage sink") {
     val tmp = java.nio.file.Files.createTempDirectory("extractjob").toString
@@ -216,5 +226,49 @@ class ExtractJobSpec extends AnyFunSuite {
       partitions = 4, resume = true)
     assert(n3 == 0L)
     assert(spark.read.parquet(s"$tmp/out/extracted").count() == 15L)
+  }
+
+  test("one part file per warc_day: a 3-day input at 4 partitions") {
+    val tmp = java.nio.file.Files.createTempDirectory("extractjobdays").toString
+    writePages(s"$tmp/pages", 0L until 72L)
+    assert(ExtractJob.run(spark, s"$tmp/pages", s"$tmp/out",
+      partitions = 4, resume = false) == 72L)
+    // the salted stage gives every task rows of every day; the rebalance
+    // on warc_day before the write gives each day to one write task
+    val days = new java.io.File(s"$tmp/out/extracted").listFiles()
+      .filter(_.getName.startsWith("warc_day=")).sortBy(_.getName)
+    assert(days.map(_.getName).toSeq ==
+      Seq("warc_day=2026-01-01", "warc_day=2026-01-02", "warc_day=2026-01-03"))
+    days.foreach { d =>
+      val parts = d.list().filter(_.startsWith("part-")).toSeq
+      assert(parts.size == 1, s"${d.getName}: ${parts.mkString(", ")}")
+    }
+    assert(spark.read.parquet(s"$tmp/out/extracted").count() == 72L)
+  }
+
+  test("--resume: an unreadable prior output fails the job and stays in " +
+    "place; an extracted/ without data files is no prior output") {
+    val tmp = java.nio.file.Files.createTempDirectory("extractjobcorrupt").toString
+    writePages(s"$tmp/pages", 0L until 5L)
+    val day = java.nio.file.Paths.get(s"$tmp/out/extracted/warc_day=2026-01-01")
+    java.nio.file.Files.createDirectories(day)
+    val corrupt = day.resolve("part-00000-corrupt.zstd.parquet")
+    val junk = "not a parquet file".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    java.nio.file.Files.write(corrupt, junk)
+    intercept[Exception] {
+      ExtractJob.run(spark, s"$tmp/pages", s"$tmp/out", partitions = 4, resume = true)
+    }
+    assert(java.nio.file.Files.exists(corrupt))
+    assert(java.nio.file.Files.readAllBytes(corrupt).sameElements(junk))
+
+    // only hidden/metadata entries (an aborted run's leftovers): resume
+    // runs as a fresh extraction
+    val empty = java.nio.file.Paths.get(s"$tmp/out2/extracted")
+    java.nio.file.Files.createDirectories(empty.resolve("_temporary/0"))
+    java.nio.file.Files.write(empty.resolve("_temporary/0/part-00000.parquet"), junk)
+    java.nio.file.Files.write(empty.resolve("_SUCCESS"), Array.emptyByteArray)
+    assert(ExtractJob.run(spark, s"$tmp/pages", s"$tmp/out2",
+      partitions = 4, resume = true) == 5L)
+    assert(spark.read.parquet(s"$tmp/out2/extracted").count() == 5L)
   }
 }

@@ -127,6 +127,64 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(exchanges == 1, s"expected exactly 1 shuffle, plan:\n${p.take(3000)}")
   }
 
+  /** The executed plan of ExtractJob.run's `extracted/` write in session
+    * `s`, and the rows it wrote, over a 3-day input at 4 partitions. */
+  private def extractWrite(s: org.apache.spark.sql.SparkSession): (String, Set[Seq[Any]]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val tmp = java.nio.file.Files.createTempDirectory("extractplan").toString
+    ExtractJobSpec.writePages(s, s"$tmp/pages", 0L until 72L)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        // AQE prints the final plan, then the initial one
+        val p = qe.executedPlan.toString.split("== Initial Plan ==")(0)
+        if (p.contains("InsertIntoHadoopFsRelationCommand") && p.contains("/out/extracted"))
+          plans.add(p)
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    try graft.job.ExtractJob.run(s, s"$tmp/pages", s"$tmp/out", partitions = 4, resume = false)
+    finally {
+      org.apache.spark.GraftListenerBusDrain.drain(s.sparkContext)
+      s.listenerManager.unregister(listener)
+    }
+    assert(plans.size == 1, plans)
+    val rows = s.read.parquet(s"$tmp/out/extracted")
+      .select("url", "warc_day", "status", "extracted_text").collect().map(_.toSeq).toSet
+    (plans.peek(), rows)
+  }
+
+  test("ExtractJob: the extraction map runs once, between the salted " +
+    "exchange and one rebalance exchange on warc_day; without AQE the " +
+    "plan keeps only the salted exchange and writes the same rows") {
+    val (p, rows) = extractWrite(spark.newSession())
+    val lines = p.linesIterator.toIndexedSeq
+    def at(what: String, pred: String => Boolean): Int = {
+      val hits = lines.indices.filter(i => pred(lines(i)))
+      assert(hits.size == 1, s"$what: ${hits.size} lines in\n$p")
+      hits.head
+    }
+    val exchanges = lines.filter(_.contains("Exchange "))
+    assert(exchanges.size == 2, p)
+    // the plan prints root first: write → rebalance → map → salted → scan
+    val rebalance = at("rebalance", l => l.contains("Exchange ") &&
+      l.contains("REBALANCE_PARTITIONS_BY_COL") && l.contains("warc_day"))
+    val map = at("extraction map", _.contains("MapPartitions"))
+    val salted = at("salted", l => l.contains("Exchange ") && l.contains("_salt"))
+    assert(rebalance < map && map < salted, p)
+    assert(rows.size == 72)
+
+    val noAqe = spark.newSession()
+    noAqe.conf.set("spark.sql.adaptive.enabled", "false")
+    val (q, rowsNoAqe) = extractWrite(noAqe)
+    val qx = q.linesIterator.filter(_.contains("Exchange ")).toSeq
+    assert(qx.size == 1 && qx.head.contains("_salt"), q)
+    assert(!q.contains("REBALANCE"), q)
+    assert(rowsNoAqe == rows)
+  }
+
   test("stage 4's quality gate is one map-only pass: the text-statistics " +
     "kernel once, no Exchange, no Window") {
     import spark.implicits._
