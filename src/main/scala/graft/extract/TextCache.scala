@@ -14,8 +14,9 @@ import graft.html.{Node, PyText}
  * [start,end) per node; a node's `text_content()` is exactly that segment
  * (a node's content stream is contiguous in document order, excluding its
  * own tail). All metrics the pipeline needs (lengths, comma/quote counts,
- * normalized-stripped lengths) are then O(segment) scans with no string
- * allocation. Values are DEFINED identically to the reference's uncached
+ * normalized-stripped lengths) are then differences of checkpointed
+ * prefix sums plus short boundary scans, with no string allocation.
+ * Values are DEFINED identically to the reference's uncached
  * formulas; only the evaluation strategy changes — equivalence is pinned
  * by the transliterated reference suites.
  *
@@ -53,7 +54,7 @@ final class TextCache {
   // the maps keep TWO live caches over the same tree correct AND cheap:
   // with slots alone, every cache switch found the other cache's gen
   // and re-walked (and re-appended!) the whole document — a measured
-  // 735× cliff on the fast-vs-fallback parity test, plus unbounded
+  // 735× cliff on a two-cache parity test, plus unbounded
   // buffer growth. A slot stamped by another cache simply falls through
   // to this cache's own map. NOT thread-safe ACROSS CACHES on a shared
   // tree (slot stores race) — trees and their caches are per-document,
@@ -69,154 +70,104 @@ final class TextCache {
   // ---- prefix sums over the text stream --------------------------------
   // One O(n) pass makes every per-node metric O(1) + short boundary scans
   // (JFR showed the repeated segment scans were the scoring hot spot).
-  // Bounded: docs above the threshold fall back to direct scans so peak
-  // memory stays small on giant pages.
-  private[graft] var arrayThreshold: Int = 1 << 21 // 2M chars
+  // One checkpoint per 8 chars, not per char: per-char arrays cost 16
+  // bytes per char per phase cache, the dominant build cost (JFR r5) and
+  // a DRAM-bandwidth term at 32 threads (BENCH.md §2). Entry k is four
+  // Ints at cp(4k), the counts over [0, 8k): code points, norm units
+  // (non-ws code points + ws-run starts), commas, quotes — 2 bytes per
+  // char; a query adds a ≤7-char forward scan. The counts must stay
+  // 32-bit: every snapshot up to Int.MaxValue chars then takes this one
+  // path (21-bit fields sent pages ≥ 2^21 chars to O(subtree) rescans).
+  // A surrogate pair counts at its START and its middle counts nothing,
+  // so a checkpoint on a pair middle includes the pair. Classification
+  // is per char: isPySpace is false on every surrogate half, so a run
+  // start needs only snap(j - 1), no stored flag.
   private var snap: String = null
-  // CHECKPOINTED prefix sums, one entry per 8 chars (round 5): the former
-  // per-char arrays wrote (and first zeroed) 16 bytes per char per phase
-  // cache — the dominant build cost (JFR r5: ensureArrays was 14% of
-  // self-time) and a DRAM-bandwidth term at 32 threads (BENCH.md §2).
-  // A checkpoint stores the counts over [0, k*8); a query scans ≤7 chars
-  // forward from its checkpoint. Values are IDENTICAL to the per-char
-  // formulation (pinned by the golden/scoring suites); only the storage
-  // density changed (2 bytes per char instead of 16).
-  // cpPacked entry: prevWs<<63 | totalCps<<42 | nonWsCps<<21 | wsRunStarts
-  // (each 21 bits — covers the threshold; prevWs seeds the run-start
-  // scan). cpPunct entry: commas<<21 | quotes.
-  // Surrogate-pair convention (same as the per-char arrays had): a pair
-  // counts at its START; a checkpoint landing on a pair MIDDLE stores the
-  // counts INCLUDING the pair, and forward scans skip middle positions.
-  private var cpPacked: Array[Long] = null
-  private var cpPunct: Array[Long] = null
+  private var cp: Array[Int] = null
 
-  private def ensureArrays(): Boolean = {
-    if (snap != null && snap.length == buf.length) return cpPacked != null
+  private def ensureArrays(): Unit = {
+    if (snap != null && snap.length == buf.length) return
     snap = buf.toString // (re)take — a new root may have been indexed
-    // null BEFORE the threshold check: a retake that falls back must not
-    // leave arrays built over an earlier, shorter snapshot — the next
-    // stable-length call would return them as valid and index out of
-    // their bounds
-    cpPacked = null
-    cpPunct = null
     val len = snap.length
-    // STRICTLY below the threshold: at len == 2^21 exactly a count can
-    // reach 2^21, which overflows the 21-bit checkpoint fields (and would
-    // collide with the prevWs flag in bit 63)
-    if (len >= arrayThreshold) return false
-    val packed = new Array[Long]((len >> 3) + 1)
-    val punct = new Array[Long]((len >> 3) + 1)
+    val a = new Array[Int](((len >> 3) + 1) << 2)
+    var t, u, c, q = 0
+    var prevWs, prevHigh = false
     var i = 0
-    var prevWs = false
-    var vt = 0L; var vp = 0L; var vr = 0L
-    var vc = 0L; var vq = 0L
     while (i < len) {
       if ((i & 7) == 0) {
-        val pw = if (prevWs) 1L << 63 else 0L
-        packed(i >> 3) = pw | (vt << 42) | (vp << 21) | vr
-        punct(i >> 3) = (vc << 21) | vq
+        val o = (i >> 3) << 2
+        a(o) = t; a(o + 1) = u; a(o + 2) = c; a(o + 3) = q
       }
-      // inlined codePointAt: the sequential charAt walk avoids repeated
-      // bounds/surrogate re-checks (this loop was the top self-time leaf);
-      // surrogate detection by range compare, not method call (JFR round 8)
-      val c1 = snap.charAt(i)
-      var cp: Int = c1
-      var w = 1
-      if (c1 >= 0xD800 && c1 < 0xDC00 && i + 1 < len) {
-        val c2 = snap.charAt(i + 1)
-        if (c2 >= 0xDC00 && c2 < 0xE000) { cp = Character.toCodePoint(c1, c2); w = 2 }
-      }
-      val ws = PyText.isPySpace(cp)
-      vt += 1
-      if (!ws) vp += 1
-      if (ws && !prevWs) vr += 1
-      if (cp == ',') vc += 1 else if (cp == '"') vq += 1
-      if (w == 2 && ((i + 1) & 7) == 0) {
-        // the pair STRADDLES a checkpoint boundary: the middle position's
-        // checkpoint stores counts INCLUDING the pair (scans from it skip
-        // the middle), prevWs = this pair's ws-ness (pairs are never ws)
-        val pw = if (ws) 1L << 63 else 0L
-        packed((i + 1) >> 3) = pw | (vt << 42) | (vp << 21) | vr
-        punct((i + 1) >> 3) = (vc << 21) | vq
-      }
+      // surrogate tests by range compare, not method call (JFR round 8)
+      val ch = snap.charAt(i)
+      val middle = prevHigh && ch >= 0xDC00 && ch < 0xE000
+      val ws = PyText.isPySpace(ch)
+      if (!middle) t += 1
+      if (ws) { if (!prevWs) u += 1 } else if (!middle) u += 1
+      if (ch == ',') c += 1 else if (ch == '"') q += 1
       prevWs = ws
-      i += w
+      prevHigh = ch >= 0xD800 && ch < 0xDC00
+      i += 1
     }
     if ((len & 7) == 0) {
       // queries at i == len read checkpoint len>>3, which the loop never
-      // reaches when len is a multiple of 8 (idempotent with the straddle
-      // write when a pair ends exactly at len)
-      val pw = if (prevWs) 1L << 63 else 0L
-      packed(len >> 3) = pw | (vt << 42) | (vp << 21) | vr
-      punct(len >> 3) = (vc << 21) | vq
+      // reaches when len is a multiple of 8
+      val o = (len >> 3) << 2
+      a(o) = t; a(o + 1) = u; a(o + 2) = c; a(o + 3) = q
     }
-    cpPacked = packed
-    cpPunct = punct
-    true
+    cp = a
   }
 
-  /** packed (totalCps<<42 | nonWs<<21 | runs) over [0,i): checkpoint +
-    * a ≤7-char forward scan. Pair-middle positions contribute nothing
-    * (their pair was counted at its start — or inside the checkpoint when
-    * the pair straddles it). */
-  private def packedAt(i: Int): Long = {
-    val k = i >> 3
-    val raw = cpPacked(k)
-    var prevWs = raw < 0 // bit 63
-    var vt = (raw >>> 42) & 0x1FFFFF
-    var vp = (raw >>> 21) & 0x1FFFFF
-    var vr = raw & 0x1FFFFF
-    var j = k << 3
-    while (j < i) {
-      val c1 = snap.charAt(j)
-      if (c1 >= 0xDC00 && c1 < 0xE000 && j > 0 &&
-          { val p = snap.charAt(j - 1); p >= 0xD800 && p < 0xDC00 }) {
-        j += 1 // pair middle: already counted
-      } else {
-        var cp: Int = c1
-        var w = 1
-        if (c1 >= 0xD800 && c1 < 0xDC00 && j + 1 < snap.length) {
-          val c2 = snap.charAt(j + 1)
-          if (c2 >= 0xDC00 && c2 < 0xE000) { cp = Character.toCodePoint(c1, c2); w = 2 }
-        }
-        val ws = PyText.isPySpace(cp)
-        vt += 1
-        if (!ws) vp += 1
-        if (ws && !prevWs) vr += 1
-        prevWs = ws
-        j += w
-      }
-    }
-    (vt << 42) | (vp << 21) | vr
+  /** Position j holds the low half of a surrogate pair (counted at its
+    * start, or inside the checkpoint when the pair straddles it). */
+  @inline private def isPairMiddle(j: Int): Boolean = {
+    val c = snap.charAt(j)
+    c >= 0xDC00 && c < 0xE000 && j > 0 &&
+      { val p = snap.charAt(j - 1); p >= 0xD800 && p < 0xDC00 }
   }
 
-  /** (commas<<21 | quotes) over [0,i) — same checkpoint + scan shape.
-    * No surrogate handling needed: no surrogate half equals ',' or '"'. */
-  private def punctAt(i: Int): Long = {
-    val k = i >> 3
-    var vc = (cpPunct(k) >>> 21) & 0x1FFFFF
-    var vq = cpPunct(k) & 0x1FFFFF
-    var j = k << 3
+  /** Code points over [0,i): checkpoint + a ≤7-char forward scan. */
+  private def totalAt(i: Int): Int = {
+    var v = cp((i >> 3) << 2)
+    var j = i & ~7
+    while (j < i) { if (!isPairMiddle(j)) v += 1; j += 1 }
+    v
+  }
+
+  /** Non-ws code points + ws-run starts over [0,i). */
+  private def normAt(i: Int): Int = {
+    var v = cp(((i >> 3) << 2) + 1)
+    var j = i & ~7
+    var prevWs = j > 0 && PyText.isPySpace(snap.charAt(j - 1))
     while (j < i) {
-      val c1 = snap.charAt(j)
-      if (c1 == ',') vc += 1 else if (c1 == '"') vq += 1
+      val ws = PyText.isPySpace(snap.charAt(j))
+      if (ws) { if (!prevWs) v += 1 } else if (!isPairMiddle(j)) v += 1
+      prevWs = ws
       j += 1
     }
-    (vc << 21) | vq
+    v
   }
 
-  @inline private def totalAt(i: Int): Int = ((packedAt(i) >>> 42) & 0x1FFFFF).toInt
-  @inline private def nonWsAt(i: Int): Int = ((packedAt(i) >>> 21) & 0x1FFFFF).toInt
-  @inline private def runsAt(i: Int): Int = (packedAt(i) & 0x1FFFFF).toInt
-  @inline private def commasAt(i: Int): Int = ((punctAt(i) >>> 21) & 0x1FFFFF).toInt
-  @inline private def quotesAt(i: Int): Int = (punctAt(i) & 0x1FFFFF).toInt
+  /** Occurrences of `ch` over [0,i) from checkpoint field `f`. No
+    * surrogate handling needed: no surrogate half equals ',' or '"'. */
+  private def charsAt(i: Int, f: Int, ch: Char): Int = {
+    var v = cp(((i >> 3) << 2) + f)
+    var j = i & ~7
+    while (j < i) { if (snap.charAt(j) == ch) v += 1; j += 1 }
+    v
+  }
 
-  /** Stripped bounds of [a0,b0) in the snapshot (short boundary scans).
-    * Surrogate pairs are never whitespace, so the walk can stop at any
-    * surrogate half without decoding the pair. */
-  private def strippedBounds(a0: Int, b0: Int): Long = {
-    var a = a0
-    var b = b0
+  @inline private def commasAt(i: Int): Int = charsAt(i, 2, ',')
+  @inline private def quotesAt(i: Int): Int = charsAt(i, 3, '"')
+  @inline private def startOf(seg: Long): Int = (seg >>> 32).toInt
+  @inline private def endOf(seg: Long): Int = (seg & 0xFFFFFFFFL).toInt
+
+  /** Stripped bounds of the segment `seg` in the snapshot (short boundary
+    * scans). Surrogate pairs are never whitespace, so the walk can stop at
+    * any surrogate half without decoding the pair. */
+  private def strippedBounds(seg: Long): Long = {
+    var a = startOf(seg)
+    var b = endOf(seg)
     var run = true
     while (run && a < b) {
       val c = snap.charAt(a)
@@ -277,68 +228,46 @@ final class TextCache {
     n.tcSegGen = gen
   }
 
+  /** `n`'s [from,to) segment, with the checkpoints current. */
+  private def segment(n: Node): Long = {
+    val seg = segOf(n)
+    ensureArrays()
+    seg
+  }
+
   /** node.text_content() as a string (allocates; prefer the metric APIs). */
   def textContent(n: Node): String = {
     val seg = segOf(n)
-    buf.substring((seg >>> 32).toInt, (seg & 0xFFFFFFFFL).toInt)
+    buf.substring(startOf(seg), endOf(seg))
   }
 
   /** (strippedPyLen, commas, quotes) of text_content() —
     * everything score_candidates needs per scorable (scoring.py:161-196).
     * Commas/quotes are whitespace-free so stripping cannot change them. */
   def innerTextMetrics(n: Node): (Int, Int, Int) = {
-    val seg = segOf(n)
-    val from = (seg >>> 32).toInt
-    val to = (seg & 0xFFFFFFFFL).toInt
-    val fast = ensureArrays()
-    var commas = 0
-    var quotes = 0
-    if (fast) {
-      val ua = punctAt(from)
-      val ub = punctAt(to)
-      commas = (((ub >>> 21) & 0x1FFFFF) - ((ua >>> 21) & 0x1FFFFF)).toInt
-      quotes = ((ub & 0x1FFFFF) - (ua & 0x1FFFFF)).toInt
-    } else {
-      var i = from
-      while (i < to) {
-        val ch = snap.charAt(i)
-        if (ch == ',') commas += 1 else if (ch == '"') quotes += 1
-        i += 1
-      }
-    }
-    val ab = strippedBounds(from, to)
-    val a = (ab >>> 32).toInt
-    val b = (ab & 0xFFFFFFFFL).toInt
-    val stripped = if (fast) totalAt(b) - totalAt(a) else snap.codePointCount(a, b)
-    (stripped, commas, quotes)
+    val seg = segment(n)
+    val ab = strippedBounds(seg)
+    (totalAt(endOf(ab)) - totalAt(startOf(ab)),
+      commasAt(endOf(seg)) - commasAt(startOf(seg)),
+      quotesAt(endOf(seg)) - quotesAt(startOf(seg)))
   }
 
   /** Python len(text_content()) — raw code points. */
   def rawPyLen(n: Node): Int = {
-    val seg = segOf(n)
-    val from = (seg >>> 32).toInt
-    val to = (seg & 0xFFFFFFFFL).toInt
-    if (ensureArrays()) totalAt(to) - totalAt(from)
-    else snap.codePointCount(from, to)
+    val seg = segment(n)
+    totalAt(endOf(seg)) - totalAt(startOf(seg))
   }
 
   /** Python text_content().count(','). */
   def commaCount(n: Node): Int = {
-    val seg = segOf(n)
-    val fast = ensureArrays()
-    val from = (seg >>> 32).toInt
-    val to = (seg & 0xFFFFFFFFL).toInt
-    if (fast) return commasAt(to) - commasAt(from)
-    var cnt = 0
-    var i = from
-    while (i < to) { if (snap.charAt(i) == ',') cnt += 1; i += 1 }
-    cnt
+    val seg = segment(n)
+    commasAt(endOf(seg)) - commasAt(startOf(seg))
   }
 
-  /** len(normalize_whitespace(text_content().strip())) — density terms.
-    * Fast path: (#non-ws cps) + (#ws runs) within the stripped bounds —
-    * each run contributes exactly one output char; with the bounds sitting
-    * on non-ws code points, every overlapping run starts inside them. */
+  /** len(normalize_whitespace(text_content().strip())) — density terms:
+    * (#non-ws cps) + (#ws runs) within the stripped bounds — each run
+    * contributes exactly one output char; with the bounds sitting on
+    * non-ws code points, every overlapping run starts inside them. */
   def normStrippedLen(n: Node): Int = {
     if (n.tcNormGen == gen) return n.tcNormLen
     val memoHit = normLenMemo.get(n)
@@ -347,36 +276,8 @@ final class TextCache {
       n.tcNormLen = v; n.tcNormGen = gen
       return v
     }
-    val seg = segOf(n)
-    val from = (seg >>> 32).toInt
-    val to = (seg & 0xFFFFFFFFL).toInt
-    val cnt =
-      if (ensureArrays()) {
-        val ab = strippedBounds(from, to)
-        val a = (ab >>> 32).toInt
-        val b = (ab & 0xFFFFFFFFL).toInt
-        val pa = packedAt(a)
-        val pb = packedAt(b)
-        ((((pb >>> 21) & 0x1FFFFF) - ((pa >>> 21) & 0x1FFFFF)) +
-          ((pb & 0x1FFFFF) - (pa & 0x1FFFFF))).toInt
-      } else {
-        val ab = strippedBounds(from, to)
-        val a = (ab >>> 32).toInt
-        val b = (ab & 0xFFFFFFFFL).toInt
-        var c = 0
-        var i = a
-        while (i < b) {
-          val cp = snap.codePointAt(i)
-          if (PyText.isPySpace(cp)) {
-            c += 1
-            while (i < b && PyText.isPySpace(snap.codePointAt(i))) i += Character.charCount(snap.codePointAt(i))
-          } else {
-            c += 1
-            i += Character.charCount(cp)
-          }
-        }
-        c
-      }
+    val ab = strippedBounds(segment(n))
+    val cnt = normAt(endOf(ab)) - normAt(startOf(ab))
     normLenMemo.put(n, Integer.valueOf(cnt))
     n.tcNormLen = cnt
     n.tcNormGen = gen
@@ -421,22 +322,6 @@ final class TextCache {
 
   /** Count of descendant <img> (memoized bottom-up). */
   def imgCount(n: Node): Int = (densitySums(n) & 0xFFFFFFFFL).toInt
-
-  /** Count of descendants with the given tag. */
-  def countTag(n: Node, tag: String): Int = {
-    var cnt = 0
-    def walk(m: Node): Unit = {
-      var i = 0
-      while (i < m.children.length) {
-        val c = m.children(i)
-        if (c.tag == tag) cnt += 1
-        walk(c)
-        i += 1
-      }
-    }
-    walk(n)
-    cnt
-  }
 
   /** All five clean_conditionally descendant counts in ONE subtree walk
     * (reference does five separate findall passes, readable.py:250-256). */

@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.regex.Pattern
-import graft.html.Parser
-import graft.extract.{Article, Scoring}
+import graft.html.{Node, Parser, PyText}
+import graft.extract.{Article, Decode, Scoring, TextCache}
 import graft.extract.Scoring.ScoredNode
 
 /** Transliterated from /root/reference/tests/test_scoring.py. */
@@ -156,33 +156,47 @@ class ScoringSpec extends AnyFunSuite {
     assert(s300 == s400)
   }
 
-  test("TextCache prefix-sum fast path ≡ scan fallback on a real article") {
-    import graft.extract.TextCache
-    val dom = Parser.parseDocument(Fixtures.article("ars.001.html"))
-    val fast = new TextCache
-    val slow = new TextCache
-    slow.arrayThreshold = 0 // force the direct-scan fallback
-    dom.iterAll.take(800).foreach { n =>
-      assert(fast.innerTextMetrics(n) == slow.innerTextMetrics(n), n.tag)
-      assert(fast.normStrippedLen(n) == slow.normStrippedLen(n), n.tag)
-      assert(fast.rawPyLen(n) == slow.rawPyLen(n), n.tag)
-      assert(fast.commaCount(n) == slow.commaCount(n), n.tag)
-    }
+  /** Every TextCache metric of `n` equals its direct-scan reference
+    * over Node.textContent. */
+  private def assertMatchesScan(cache: TextCache, n: Node, clue: => String): Unit = {
+    val text = n.textContent
+    Seq(
+      "innerTextMetrics" -> (cache.innerTextMetrics(n), TextScan.innerTextMetrics(text)),
+      "normStrippedLen" -> (cache.normStrippedLen(n), TextScan.normStrippedLen(text)),
+      "rawPyLen" -> (cache.rawPyLen(n), TextScan.rawPyLen(text)),
+      "commaCount" -> (cache.commaCount(n), TextScan.commaCount(text))
+    ).foreach { case (metric, (got, want)) => assert(got == want, s"$clue <${n.tag}> $metric") }
   }
 
-  test("TextCache checkpointed prefix sums ≡ scan fallback on adversarial " +
-    "random text (astral pairs and ws runs straddling 8-char boundaries, " +
-    "len % 8 == 0 edges)") {
-    import graft.extract.TextCache
+  // alphabet biased toward the hard cases: surrogate pairs (astral),
+  // python-space chars beyond ASCII, ws runs, commas/quotes
+  private val AdversarialPieces = Array("a", "b", ",", "\"", " ", "  ", "\t",
+    "\u00a0", "\u2028", "𝕏", "😀", "語", ", ,", "𝕏x")
+
+  test("TextCache prefix sums ≡ direct-scan reference on real articles") {
+    val ars = Parser.parseDocument(Fixtures.article("ars.001.html"))
+    val arsCache = new TextCache
+    ars.iterAll.take(800).foreach(n => assertMatchesScan(arsCache, n, "ars.001"))
+    // the benchmark's largest page (the fixture's bytes repeated 20 times),
+    // above the old 2^21-char bound: the root plus a seeded sample, since
+    // the reference is O(subtree) per node
+    val bytes = Fixtures.articleBytes("corpus_antipope_org.html")
+    val dom = Parser.parseDocument(Decode.decodeHtml(Array.fill(20)(bytes).flatten))
+    assert(dom.textContent.length > (1 << 21))
+    val nodes = dom.iterAll.toVector
+    val rnd = new scala.util.Random(2020)
+    val cache = new TextCache
+    (dom +: Seq.fill(300)(nodes(rnd.nextInt(nodes.size))))
+      .foreach(n => assertMatchesScan(cache, n, "antipope ×20"))
+  }
+
+  test("TextCache prefix sums ≡ direct-scan reference on adversarial random text") {
+    // astral pairs and ws runs straddling 8-char boundaries, len % 8 == 0 edges
     val rnd = new scala.util.Random(4242)
-    // alphabet biased toward the hard cases: surrogate pairs (astral),
-    // python-space chars beyond ASCII, ws runs, commas/quotes
-    val pieces = Array("a", "b", ",", "\"", " ", "  ", "\t", " ",
-      " ", "𝕏", "😀", "語", ", ,", "𝕏x")
     (0 until 40).foreach { trial =>
       val sb = new StringBuilder
       val target = rnd.nextInt(120)
-      while (sb.length < target) sb ++= pieces(rnd.nextInt(pieces.length))
+      while (sb.length < target) sb ++= AdversarialPieces(rnd.nextInt(AdversarialPieces.length))
       // force the len-multiple-of-8 edge on some trials
       if (trial % 4 == 0 && (sb.length & 7) != 0)
         sb ++= "z" * (8 - (sb.length & 7))
@@ -196,20 +210,61 @@ class ScoringSpec extends AnyFunSuite {
       val dom = Parser.parseDocument(
         s"<html><body><div><p>${text.substring(0, safeCut)}</p>" +
           s"<span>${text.substring(safeCut)}</span></div></body></html>")
-      val fast = new TextCache
-      val slow = new TextCache
-      slow.arrayThreshold = 0
-      dom.iterAll.foreach { n =>
-        assert(fast.innerTextMetrics(n) == slow.innerTextMetrics(n),
-          s"trial $trial <${n.tag}> metrics over ${text.take(40)}…")
-        assert(fast.normStrippedLen(n) == slow.normStrippedLen(n),
-          s"trial $trial <${n.tag}> normStrippedLen")
-        assert(fast.rawPyLen(n) == slow.rawPyLen(n),
-          s"trial $trial <${n.tag}> rawPyLen")
-        assert(fast.commaCount(n) == slow.commaCount(n),
-          s"trial $trial <${n.tag}> commaCount")
+      val cache = new TextCache
+      dom.iterAll.foreach(n => assertMatchesScan(cache, n, s"trial $trial over ${text.take(40)}…"))
+    }
+  }
+
+  test("TextCache ≡ direct-scan reference on a synthetic doc above 2^22 chars") {
+    // counts past 2^21 and 2^22 (the old 21-bit checkpoint fields overflow
+    // there); tiny elements near both marks put segment ends, astral pairs,
+    // non-ASCII ws runs and commas/quotes on the checkpoints around them
+    val marks = Seq(1 << 21, 1 << 22)
+    val rnd = new scala.util.Random(2122)
+    val html = new StringBuilder("<html><body>")
+    var textLen = 0
+    def run(): Unit = {
+      val near = marks.exists(m => math.abs(textLen - m) < 512)
+      (0 until (if (near) rnd.nextInt(4) else rnd.nextInt(1500))).foreach { _ =>
+        val p = AdversarialPieces(rnd.nextInt(AdversarialPieces.length))
+        html ++= p
+        textLen += p.length
       }
     }
+    while (textLen < (1 << 22) + 4096) {
+      html ++= "<div>"
+      (0 until 8).foreach { _ =>
+        html ++= "<p>"; run(); html ++= "<b>"; run(); html ++= "</b>"; run(); html ++= "</p>"
+      }
+      html ++= "</div>"
+    }
+    html ++= "</body></html>"
+    val dom = Parser.parseDocument(html.toString)
+    // end at len % 8 == 0, so the root's end reads the final checkpoint
+    val last = dom.iterAll.filter(_.tag == "p").toSeq.last
+    val pad = (8 - (dom.textContent.length & 7)) & 7
+    last.tail = Option(last.tail).getOrElse("") + "z" * pad
+    val len = dom.textContent.length
+    assert(len > (1 << 22) && len % 8 == 0)
+    // each node's [start,end) in the root's text, to find the nodes
+    // whose segments end near the marks
+    val seg = new java.util.IdentityHashMap[Node, (Int, Int)]
+    def walk(n: Node, at: Int): Int = {
+      var pos = at + Option(n.text).fold(0)(_.length)
+      n.children.foreach { c => pos = walk(c, pos) + Option(c.tail).fold(0)(_.length) }
+      seg.put(n, (at, pos))
+      pos
+    }
+    walk(dom, 0)
+    val nodes = dom.iterAll.toVector
+    val nearMarks = nodes.filter { n =>
+      val (a, b) = seg.get(n)
+      marks.exists(m => math.abs(a - m) < 64 || math.abs(b - m) < 64)
+    }
+    assert(nearMarks.size >= 16, "segments ending near 2^21 and 2^22")
+    val sample = dom +: (nearMarks ++ Seq.fill(150)(nodes(rnd.nextInt(nodes.size))))
+    val cache = new TextCache
+    sample.foreach { n => assertMatchesScan(cache, n, s"at ${seg.get(n)}") }
   }
 
   test("link density within [0,1] on ars.001 (test_readable.py:283-290)") {
@@ -218,5 +273,43 @@ class ScoringSpec extends AnyFunSuite {
       val d = Scoring.getLinkDensity(n)
       assert(d >= 0.0 && d <= 1.0)
     }
+  }
+}
+
+/** The direct scans TextCache's checkpoints replaced, kept as the
+  * reference: each metric over a node's text_content() string. */
+object TextScan {
+  private def strippedBounds(s: String): (Int, Int) = {
+    var a = 0
+    var b = s.length
+    while (a < b && PyText.isPySpace(s.charAt(a))) a += 1 // ws is never a surrogate
+    while (b > a && PyText.isPySpace(s.charAt(b - 1))) b -= 1
+    (a, b)
+  }
+
+  def commaCount(s: String): Int = s.count(_ == ',')
+
+  def rawPyLen(s: String): Int = s.codePointCount(0, s.length)
+
+  def innerTextMetrics(s: String): (Int, Int, Int) = {
+    val (a, b) = strippedBounds(s)
+    (s.codePointCount(a, b), commaCount(s), s.count(_ == '"'))
+  }
+
+  def normStrippedLen(s: String): Int = {
+    val (a, b) = strippedBounds(s)
+    var c = 0
+    var i = a
+    while (i < b) {
+      val cp = s.codePointAt(i)
+      if (PyText.isPySpace(cp)) {
+        c += 1
+        while (i < b && PyText.isPySpace(s.codePointAt(i))) i += Character.charCount(s.codePointAt(i))
+      } else {
+        c += 1
+        i += Character.charCount(cp)
+      }
+    }
+    c
   }
 }
