@@ -87,48 +87,4 @@ object PyText {
   /** Python len(): code points. */
   def pyLen(s: String): Int =
     if (s == null) 0 else s.codePointCount(0, s.length)
-
-  /**
-   * len(normalize_whitespace(s.strip())) without building the intermediate
-   * strings: inside the stripped bounds each whitespace run contributes 1
-   * and every other code point contributes 1. Equivalence with the
-   * composed form is property-tested.
-   */
-  def normStrippedLen(s: String): Int = {
-    if (s == null) return 0
-    var a = 0
-    var b = s.length
-    while (a < b && isPySpace(s.codePointAt(a))) a += Character.charCount(s.codePointAt(a))
-    while (b > a) {
-      val cp = s.codePointBefore(b)
-      if (!isPySpace(cp)) return countRegion(s, a, b)
-      b -= Character.charCount(cp)
-    }
-    0
-  }
-
-  private def countRegion(s: String, from: Int, to: Int): Int = {
-    var n = 0
-    var i = from
-    while (i < to) {
-      val cp = s.codePointAt(i)
-      if (isPySpace(cp)) {
-        n += 1
-        while (i < to && isPySpace(s.codePointAt(i))) i += Character.charCount(s.codePointAt(i))
-      } else {
-        n += 1
-        i += Character.charCount(cp)
-      }
-    }
-    n
-  }
-
-  /** Python str.count(sub) for a single char. */
-  def countChar(s: String, c: Char): Int = {
-    if (s == null) return 0
-    var n = 0
-    var i = 0
-    while (i < s.length) { if (s.charAt(i) == c) n += 1; i += 1 }
-    n
-  }
 }

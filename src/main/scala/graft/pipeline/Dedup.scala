@@ -218,25 +218,7 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
 
     // verification payload joined back by id (ids-only pair shuffle above)
-    verifyJaccard(pairs, withSh, withSh, threshold)
-  }
-
-  /** Shared Jaccard verify: re-join shingle arrays by id on both sides of
-    * the (id_a, id_b) candidate pairs, keep pairs at/above `threshold`.
-    * One implementation ONLY — the q17 (self-join) and q29 (incremental)
-    * oracles both derive from this exact math. */
-  private def verifyJaccard(pairs: DataFrame, withShA: DataFrame,
-                            withShB: DataFrame, threshold: Double): DataFrame = {
-    val shA = withShA.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val shB = withShB.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    pairs
-      .join(shA, Seq("id_a"))
-      .join(shB, Seq("id_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+    verifyJaccard(pairs, withSh, withSh, threshold).drop("inter")
   }
 
   /** (band, band_hash, id) from an (id, sh) frame: minhash signature in
@@ -304,18 +286,14 @@ object Dedup {
     * frame to each, instead of every entry point re-running ShingleHash
     * over the batch text. */
   def shingleTable(df: DataFrame, idCol: String, textCol: String,
-                   shingleAlgo: String = AlgoXx64): DataFrame =
+                   shingleAlgo: String = AlgoXx64, n: Int = 3): DataFrame =
     Mat.corpus(df.select(col(idCol).as("id"),
-      shingleHashes(col(textCol), algo = shingleAlgo).as("sh")))
-
-  private def prepShingles(df: DataFrame, idCol: String, textCol: String,
-                           shingleAlgo: String): DataFrame =
-    shingleTable(df, idCol, textCol, shingleAlgo)
+      shingleHashes(col(textCol), n, shingleAlgo).as("sh")))
 
   def buildMinHashIndex(corpus: DataFrame, idCol: String, textCol: String,
                         k: Int = 32, bands: Int = 8,
                         shingleAlgo: String = AlgoXx64): MinHashIndex = {
-    val sh = prepShingles(corpus, idCol, textCol, shingleAlgo)
+    val sh = shingleTable(corpus, idCol, textCol, shingleAlgo)
     MinHashIndex(k, bands, shingleAlgo, bandedSignature(sh, k, bands), sh)
   }
 
@@ -373,7 +351,7 @@ object Dedup {
                            idCol: String, textCol: String): Int = {
     val (_, _, algo, _) = readIndexMeta(spark, path)
     appendShingledToMinHashIndex(spark, path,
-      prepShingles(batch, idCol, textCol, algo))
+      shingleTable(batch, idCol, textCol, algo))
   }
 
   /** As appendToMinHashIndex, from an already-shingled (id, sh) frame
@@ -465,7 +443,7 @@ object Dedup {
                             idCol: String, textCol: String,
                             threshold: Double = 0.8): DataFrame =
     minhashLshJoinIndexedPrepped(index,
-      prepShingles(batch, idCol, textCol, index.shingleAlgo), threshold)
+      shingleTable(batch, idCol, textCol, index.shingleAlgo), threshold)
 
   /** As minhashLshJoinIndexed, from an already-shingled batch frame
     * (produced with the index's shingle algo — see shingleTable). */
@@ -479,7 +457,7 @@ object Dedup {
       .where(col("id_a") =!= col("id_b")) // a url can sit in both sides
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
-    verifyJaccard(pairs, index.shingles, shB, threshold)
+    verifyJaccard(pairs, index.shingles, shB, threshold).drop("inter")
   }
 
   // ---- simhash --------------------------------------------------------
@@ -621,50 +599,123 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
+  // ---- set-similarity core: rarest-first prefix and pair verify --------
+  //
+  // One implementation each, shared by MinHash-LSH, prefixJaccardJoin (q53)
+  // and spanContainmentJoin (q63). Candidate generation stays per measure:
+  // each needs its own lemma (band join; prefix × prefix with length and
+  // positional prunes; prefix × full postings).
+
+  /**
+   * The rarest-first PREFIX of every set (PPJoin's prefix filter, Xiao et
+   * al., "Efficient Similarity Joins for Near Duplicate Detection", WWW
+   * 2008). Fix one GLOBAL element order — document frequency ascending,
+   * then element. If a set x must share at least ⌈t·|x|⌉ of its elements
+   * with another set, one of them lies within x's first
+   * |x| − ⌈t·|x|⌉ + 1 elements: had all of them sat past that prefix,
+   * they could not fit in the remaining ⌈t·|x|⌉ − 1 positions. The lemma
+   * holds under ANY total order (so an oracle may rank its own elements
+   * and still verify the identical pairs); rarest first makes the
+   * candidate join key on the shortest posting lists, and a corpus-wide
+   * boilerplate element ranks last and sits in almost no prefix.
+   *
+   * The prefix length is |x| − ⌊t·|x|⌋ + 1, floor not ceil: under
+   * floating point, ceil(t·|x|) can EXCEED the exact ceiling when the
+   * product lands an ulp above an integer (0.035·200 =
+   * 7.000000000000001 → ceil 8), silently shortening the prefix below the
+   * no-false-negative bound; floor errs only toward a LONGER prefix (at
+   * most one extra element per set), which the exact verify absorbs.
+   * Lowering `t` only lengthens the prefix, so a caller whose verify
+   * admits pairs slightly below its threshold passes a slacked `t` (q63;
+   * pinned with q53 in PipelineOpsSpec).
+   *
+   * Input: postings (id, elem), DISTINCT per id so an element's count is
+   * its document frequency, and sizes (id, sz). Output (elem, id, rk, sz)
+   * for the prefix rows, rk the 1-based rank within the set. The df rides
+   * ONE window over the element partitioning instead of a groupBy +
+   * join-back (guide §2.4 — both legs share the key; r8), feeding the
+   * per-set rank window directly.
+   */
+  private[graft] def rarestFirstPrefix(postings: DataFrame, sizes: DataFrame,
+                                       t: Double): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    postings
+      .withColumn("edf", count(lit(1)).over(Window.partitionBy(col("elem"))))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("id")).orderBy(col("edf").asc, col("elem").asc)))
+      .join(sizes, Seq("id"))
+      .where(col("rk") <= col("sz") - floor(lit(t) * col("sz")) + 1)
+      .select(col("elem"), col("id"), col("rk"), col("sz"))
+  }
+
+  /** (id, elem) postings and (id, sz) sizes of an (id, sh) table: the
+    * explode is cheap codegen over the checkpoint scan, and a size is a
+    * map-side array length (no postings groupBy shuffle). */
+  private def postingsAndSizes(sh: DataFrame): (DataFrame, DataFrame) =
+    (sh.select(col("id"), explode(col("sh")).as("elem")),
+      sh.select(col("id"), size(col("sh")).cast("long").as("sz")))
+
+  /** Pair verify: the (id, sh) arrays re-join by id onto the (id_a, id_b)
+    * candidates, which carry ids only (at web scale the pair shuffle must
+    * not carry the arrays), and one codegen array_intersect pass counts
+    * the overlap. Output (id_a, id_b, inter, n_a, n_b). inter is |A∩B|
+    * and n_a + n_b − inter is |A∪B| only because shingleHashes arrays are
+    * DISTINCT; a non-distinct table must not feed this verify. */
+  private def pairOverlap(pairs: DataFrame, shA: DataFrame,
+                          shB: DataFrame): DataFrame =
+    pairs
+      .join(shA.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .join(shB.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long").as("inter"),
+        size(col("sh_a")).cast("long").as("n_a"),
+        size(col("sh_b")).cast("long").as("n_b"))
+
+  /** Jaccard verify, one implementation for MinHash-LSH (q17, q29,
+    * CurateJob's near stage, --dedup-index) and prefixJaccardJoin (q53):
+    * keeps pairs whose UNROUNDED J = inter / (n_a + n_b − inter) reaches
+    * `threshold`; output (id_a, id_b, inter, jaccard), jaccard rounded
+    * to 4. The q17, q29 and q53 oracles all derive from this math. */
+  private def verifyJaccard(pairs: DataFrame, shA: DataFrame, shB: DataFrame,
+                            threshold: Double): DataFrame =
+    pairOverlap(pairs, shA, shB)
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col("n_a") + col("n_b") - col("inter")).cast("double"))
+      .where(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("inter"),
+        round(col("jaccard"), 4).as("jaccard"))
+
   // ---- prefix-filtering set-similarity join (ssjoin / PPJoin family) ---
 
   /**
    * Exact set-similarity Jaccard self-join via PREFIX FILTERING (the
-   * ssjoin/PPJoin family): under a GLOBAL element order (document
-   * frequency ascending, then element — rarest first), two sets with
-   * J(A,B) ≥ t must share at least one element within their first
-   * |x| − ⌈t·|x|⌉ + 1 elements under that order — if all of A's
-   * ≥ ⌈t·|A|⌉ shared elements sat past its prefix, they could not fit
-   * in the remaining ⌈t·|A|⌉ − 1 positions. Only those PREFIX elements
-   * enter the candidate self-join. Versus ngramJaccard's stop-shingle
-   * df-cap this is the principled bound: NO false negatives at any
-   * threshold in (0, 1] (the cap drops qualifying pairs whose only
+   * ssjoin/PPJoin family): J(A,B) ≥ t ⟹ |A∩B| ≥ t·|A∪B| ≥ t·|A|, so
+   * every qualifying pair shares an element inside BOTH sets'
+   * rarest-first prefixes (`rarestFirstPrefix` at t), and only prefix
+   * elements enter the candidate self-join. Versus ngramJaccard's
+   * stop-shingle df-cap this is the principled bound: NO false negatives
+   * at any threshold in (0, 1] (the cap drops qualifying pairs whose only
    * shared shingles are frequent), and the candidate join keys on each
-   * set's RAREST elements — the shortest posting lists — instead of an
-   * arbitrary cutoff. Candidates carry ids only; the exact-Jaccard
-   * verify re-joins the element postings by id.
+   * set's RAREST elements instead of an arbitrary cutoff. Candidates
+   * carry ids only; `verifyJaccard` re-joins the element arrays by id.
    *
    * Set elements are the KERNEL shingle hashes (8-byte postings through
    * every shuffle, codegen shingling — never the interpreted HOF
    * shingles or full n-gram strings), which is sound because every use
    * is element EQUALITY: candidates, the intersection count, and the
-   * per-engine (df, element) order — the prefix lemma holds under ANY
-   * total order, so the q53 oracle may rank its own string elements and
-   * still produce the identical verified output (the q16/q26
-   * hash-EQUALITY precedent).
-   *
-   * The prefix length is computed as |x| − floor(t·|x|) + 1: under
-   * floating-point, ceil(t·|x|) can EXCEED the exact ceiling when the
-   * product lands epsilon above an integer (0.035·200 =
-   * 7.000000000000001 → ceil 8), silently shortening the prefix below
-   * the no-false-negative bound; floor errs only toward a LONGER prefix
-   * (at most one extra element per set) under any rounding, which the
-   * exact verify absorbs.
+   * per-engine (df, element) order — the q53 oracle ranks its own string
+   * elements and still produces the identical verified output (the
+   * q16/q26 hash-EQUALITY precedent).
    *
    * Two further PPJoin prunes run BETWEEN candidate generation and the
-   * full-postings verify (the verify joins dominate the query's cost —
-   * every candidate they never see is a shuffle row saved), both
-   * sound — they drop only pairs that provably cannot reach t:
+   * verify (the verify joins dominate the query's cost — every candidate
+   * they never see is a shuffle row saved), both sound — they drop only
+   * pairs that provably cannot reach t:
    *
    *  - LENGTH filter: J(A,B) ≥ t ⟹ |A∩B| ≥ t·|B| (from i ≥ t(a+b−i)
    *    and b ≥ i) and |A| ≥ |A∩B|, so |A| ≥ t·|B| and symmetrically
-   *    |B| ≥ t·|A|. Sizes ride the prefix rows (already joined for the
-   *    prefix length), so the filter costs zero extra joins.
+   *    |B| ≥ t·|A|. Sizes ride the prefix rows, so the filter costs zero
+   *    extra joins.
    *  - POSITIONAL filter (per-pair counting form, r8): aggregate the
    *    matching prefix rows per pair; with e* the LAST common prefix
    *    element under the global order at ranks (ra, rb) — one row,
@@ -674,12 +725,10 @@ object Dedup {
    *    matches, and every common element above e* has rank > ra and
    *    > rb, so |A∩B| ≤ pcnt + min(|A|−ra, |B|−rb). J ≥ t ⟺
    *    (1+t)·|A∩B| ≥ t·(|A|+|B|), so a pair failing that test on the
-   *    bound cannot qualify. (A qualifying pair always has ≥ 1 common
-   *    element inside both prefixes — if it hadn't, all ≥ ⌈t|A|⌉
-   *    shared elements would sit in A's last ⌈t|A|⌉ − 1 positions —
-   *    so the aggregate sees every qualifying pair.) This is strictly
-   *    stronger than r7's any-row first-match test, with the same
-   *    no-false-negative guarantee.
+   *    bound cannot qualify. A qualifying pair always has ≥ 1 common
+   *    element inside both prefixes, so the aggregate sees every
+   *    qualifying pair. This is strictly stronger than r7's any-row
+   *    first-match test, with the same no-false-negative guarantee.
    *
    * Both filters compare in doubles with a multiplicative 1e−9 slack on
    * the t-product side (t·|B|, t·(|A|+|B|)): the exact comparisons hold
@@ -693,8 +742,8 @@ object Dedup {
    * Plan shape: one df-count shuffle, one per-doc window (rank under the
    * global order), the prefix-postings self-join with the two prunes
    * aggregated per pair, and an array-intersect verify over the
-   * materialized element arrays (re-joined by id — candidates carry ids
-   * only) — every join a bounded equi-join, no pairwise scan.
+   * materialized element arrays — every join a bounded equi-join, no
+   * pairwise scan.
    *
    * @param n set elements: 1 = word tokens, ≥2 = word n-gram shingles.
    *          Pick the element space to match the corpus: a corpus with
@@ -706,59 +755,33 @@ object Dedup {
   def prefixJaccardJoin(df: DataFrame, idCol: String, textCol: String,
                         threshold: Double = 0.6, n: Int = 1,
                         algo: String = AlgoXx64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold=$threshold outside (0, 1]: at 0 every disjoint pair " +
         "qualifies by definition and no postings join can produce it")
-    // distinct element hashes per doc (set semantics) materialized ONCE
-    // as the ARRAY table (the shingleTable discipline): the df-count and
-    // prefix ranking explode it (cheap codegen over the checkpoint
-    // scan), sizes are a map-side array length (the pre-r8 postings
-    // groupBy shuffle bought nothing), and the verify intersects the
-    // arrays directly (below)
-    val sh = Mat.corpus(df.select(col(idCol).as("id"),
-      shingleHashes(col(textCol), n, algo).as("sh")))
-    val toks = sh.select(col("id"), explode(col("sh")).as("tok"))
-    val sizes = sh.select(col("id"), size(col("sh")).cast("long").as("sz"))
-    // the element df rides ONE window over the tok partitioning instead
-    // of a groupBy + join-back (guide §2.4 — both legs shared the tok
-    // key; r8), feeding the per-doc rank window directly. Materialized
-    // ONCE: the candidate self-join's two branches are separate scans —
-    // unmaterialized, the df window + rank window ran twice.
-    val prefix = Mat.corpus(toks
-      .withColumn("tdf", count(lit(1)).over(Window.partitionBy(col("tok"))))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("tdf").asc, col("tok").asc)))
-      .join(sizes, Seq("id"))
-      .where(col("rk") <= col("sz") - floor(lit(threshold) * col("sz")) + 1)
-      .select(col("tok"), col("id"), col("rk"), col("sz")))
+    // the distinct element ARRAYS, materialized once: the prefix explodes
+    // them, sizes are array lengths, and the verify intersects them
+    val sh = shingleTable(df, idCol, textCol, algo, n)
+    val (elems, sizes) = postingsAndSizes(sh)
+    // materialized ONCE: the candidate self-join's two branches are
+    // separate scans — unmaterialized, the df and rank windows ran twice
+    val prefix = Mat.corpus(rarestFirstPrefix(elems, sizes, threshold))
     // slack errs only toward keeping a boundary candidate (see scaladoc)
     val tSlack = lit(threshold * (1.0 - 1e-9))
-    val cand = prefix.select(col("tok"), col("id").as("id_a"),
+    val cand = prefix.select(col("elem"), col("id").as("id_a"),
         col("rk").as("rk_a"), col("sz").as("sz_a"))
-      .join(prefix.select(col("tok"), col("id").as("id_b"),
-        col("rk").as("rk_b"), col("sz").as("sz_b")), Seq("tok"))
+      .join(prefix.select(col("elem"), col("id").as("id_b"),
+        col("rk").as("rk_b"), col("sz").as("sz_b")), Seq("elem"))
       .where(col("id_a") < col("id_b"))
       // length filter: |A| ≥ t·|B| and |B| ≥ t·|A|
       .where(col("sz_a") >= tSlack * col("sz_b") &&
         col("sz_b") >= tSlack * col("sz_a"))
-      // POSITIONAL filter, per-PAIR counting form (r8 — strictly
-      // stronger than the r7 any-row test, same no-false-negative
-      // guarantee): aggregate the matching prefix rows per pair and let
-      // e* be the LAST common prefix element under the global order, at
-      // ranks (ra, rb) = (max rk_a, max rk_b) — the same row, because
-      // within-doc ranks are consistent with the ONE global (df, tok)
-      // order. Every common element BELOW e* has rank < ra in A and
-      // < rb in B, i.e. sits in both prefixes, so it is already one of
-      // the pcnt counted matches; every common element ABOVE e* has
-      // rank > ra and > rb, so there are at most
-      // min(sz_a − ra, sz_b − rb) of them. Hence
-      // |A∩B| ≤ pcnt + min(sz_a − ra, sz_b − rb), and a pair failing
-      // (1+t)·bound ≥ t·(sz_a+sz_b) cannot reach J ≥ t. The r7 filter
-      // admitted any pair whose FIRST match passed the 1 + min(…) test
-      // — this version counts all matches and evaluates at the last
-      // one, cutting the probe corpus's 124k surviving candidates to
-      // the low thousands for the same 256 verified pairs.
+      // POSITIONAL filter, per-PAIR counting form (scaladoc): (ra, rb) =
+      // (max rk_a, max rk_b) is the LAST common prefix element — the same
+      // row, because within-doc ranks follow the ONE global (df, elem)
+      // order — so |A∩B| ≤ pcnt + min(sz_a − ra, sz_b − rb). Counting
+      // all matches and evaluating at the last one cut the probe
+      // corpus's 124k surviving r7 candidates to the low thousands for
+      // the same 256 verified pairs.
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("pcnt"),
         max(col("rk_a")).as("ra"), max(col("rk_b")).as("rb"),
@@ -767,23 +790,7 @@ object Dedup {
           least(col("sz_a") - col("ra"), col("sz_b") - col("rb"))) *
         lit(1.0 + threshold) >= tSlack * (col("sz_a") + col("sz_b")))
       .select(col("id_a"), col("id_b"))
-    // exact verify: the element ARRAYS re-join by id (the minhashLsh
-    // payload discipline — candidates above carried ids only) and the
-    // intersection counts in one codegen array_intersect pass; same
-    // integer |A∩B| as the pre-r8 postings-join + groupBy (the arrays
-    // are distinct by construction), three shuffles fewer
-    cand
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("inter",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("n_a", size(col("sh_a")).cast("long"))
-      .withColumn("n_b", size(col("sh_b")).cast("long"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")).cast("double"))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("inter"),
-        round(col("jaccard"), 4).as("jaccard"))
+    verifyJaccard(cand, sh, sh, threshold)
   }
 
   // ---- cross-doc repeated spans (exact-substring contamination) --------
@@ -1004,92 +1011,57 @@ object Dedup {
    * shared_spans, containment) with id_a < id_b, containment rounded
    * to 4.
    *
-   * Candidate generation uses a CONTAINMENT-ADAPTED PREFIX FILTER (the
-   * q53 PPJoin lemma transplanted — VERDICT r7 #1; the bare span-hash
+   * Candidate generation (`containmentCandidates`) is the containment
+   * form of q53's prefix filter (VERDICT r7 #1: the bare span-hash
    * self-join minted d(d−1)/2 pair rows per gram of document frequency
-   * d, and a web-scale license/nav 8-gram has df ~10^6): under the
-   * global rarest-first span order (df asc, then span hash),
-   * containment ≥ c over the smaller set S (|S| = m) forces a SHARED
-   * span among S's first m − ⌊c·m⌋ + 1 spans — if none of those were
-   * shared, S would carry ≥ m − ⌊c·m⌋ + 1 unshared spans, so
-   * |A∩B| ≤ ⌊c·m⌋ − 1 < c·m, contradicting containment ≥ c. Which side
-   * of a pair is smaller isn't known at generation time, so candidates
-   * come from EVERY doc's prefix joined against the FULL postings of
-   * the other side (both orientations): the smaller side contributes
-   * the prefix row, the larger side the full posting row — no false
-   * negatives, and the exact verify below is unchanged. A gram of df d
-   * with p prefix occurrences now mints p·d candidate rows instead of
-   * d²; a corpus-wide boilerplate gram is by definition FREQUENT, so
-   * it ranks LAST in the rarest-first order and sits in almost no
-   * doc's prefix — p ≈ 0 exactly where d explodes (pinned by the
-   * planted hot-gram test in SubstringDedupSpec). The verify admits a
-   * pair at round(|A∩B|/m, 4) ≥ c, i.e. at |A∩B|/m ≥ c − 5e-5, so the
-   * lemma runs at c' = (c − 5e-5)·(1 − 1e-9): the rounding slack, then
-   * q53's 1e-9 slack toward admission. floor (not ceil) and both
-   * slacks err only toward a LONGER prefix; extra candidates are
-   * absorbed by the exact verify (a pair at 0.499975, which rounds to
-   * 0.5, is pinned in SubstringDedupSpec).
+   * d, and a web-scale license/nav 8-gram has df ~10^6): containment
+   * ≥ c over the smaller set S (|S| = m) means |A∩B| ≥ c·m, so S's
+   * rarest-first prefix at c holds a shared span. Which side of a pair
+   * is smaller isn't known at generation time, so every doc's prefix
+   * joins the FULL postings of the other side (both orientations): the
+   * smaller side contributes the prefix row, the larger side the full
+   * posting row — no false negatives. A gram of df d with p prefix
+   * occurrences mints p·d candidate rows instead of d²; a corpus-wide
+   * boilerplate gram ranks LAST and sits in almost no doc's prefix, so
+   * p ≈ 0 exactly where d explodes (pinned by the planted hot-gram test
+   * in SubstringDedupSpec).
    *
-   * Verify: candidates (ids only, deduplicated) re-join the span
-   * postings by id — |A∩B| via one (id, h) equi-join, sizes by id —
-   * the exact containment math of the pre-r8 formulation, so the
-   * output (and the q63 oracle hash) is identical.
+   * The verify admits a pair at round(|A∩B|/m, 4) ≥ c, i.e. at
+   * |A∩B|/m ≥ c − 5e-5, so the prefix runs at c' = (c − 5e-5)·(1 − 1e-9):
+   * the rounding slack, then q53's 1e-9 slack toward admission (a pair at
+   * 0.499975, which rounds to 0.5, is pinned in SubstringDedupSpec).
+   * Verify: `pairOverlap` with containment = inter / min(n_a, n_b).
    */
   def spanContainmentJoin(df: DataFrame, idCol: String, textCol: String,
                           n: Int = 8, minContainment: Double = 0.5,
                           algo: String = AlgoXx64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(minContainment > 0.0 && minContainment <= 1.0,
       s"minContainment=$minContainment outside (0, 1]: at 0 every pair " +
         "qualifies by definition and no postings join can produce it")
-    // the span-ARRAY table materialized once (the shingleTable
-    // discipline): candidates explode it, sizes are a map-side array
-    // length, and the verify intersects arrays directly
-    val sh = Mat.corpus(df.select(col(idCol).as("id"),
-      shingleHashes(col(textCol), n, algo).as("sh")))
-    val spans = sh.select(col("id"), explode(col("sh")).as("h"))
-    val sizes = sh.select(col("id"), size(col("sh")).cast("long").as("nspans"))
-    // exact verify: span arrays re-join by id (candidates carry ids
-    // only); |A∩B| as one codegen array_intersect — same integer count
-    // as a postings-join + groupBy over the distinct span postings
-    containmentCandidates(spans, sizes, minContainment)
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("shared_spans",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("containment",
-        round(col("shared_spans").cast("double")
-          / least(size(col("sh_a")), size(col("sh_b"))).cast("double"), 4))
+    val sh = shingleTable(df, idCol, textCol, algo, n)
+    val (spans, sizes) = postingsAndSizes(sh)
+    pairOverlap(containmentCandidates(spans, sizes, minContainment), sh, sh)
+      .withColumn("containment", round(col("inter").cast("double") /
+        least(col("n_a"), col("n_b")).cast("double"), 4))
       .where(col("containment") >= minContainment)
-      .select(col("id_a"), col("id_b"), col("shared_spans"),
+      .select(col("id_a"), col("id_b"), col("inter").as("shared_spans"),
         col("containment"))
   }
 
   /** The containment-prefix candidate generator (see spanContainmentJoin
-    * scaladoc for the lemma): (id_a, id_b) distinct, id_a < id_b, from
-    * each doc's rarest m − ⌊c'·m⌋ + 1 spans joined against the FULL
-    * postings, c' the rounding-slacked threshold. private[graft] so the
-    * spec can pin the candidate-count collapse on a planted hot-gram
-    * corpus directly. */
+    * scaladoc): (id_a, id_b) distinct, id_a < id_b, from each doc's
+    * rarest-first prefix at the rounding-slacked threshold joined against
+    * the FULL postings (id, elem). private[graft] so the spec can pin the
+    * candidate-count collapse on a planted hot-gram corpus directly. */
   private[graft] def containmentCandidates(spans: DataFrame, sizes: DataFrame,
                                            minContainment: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // the verify admits round(s/m, 4) ≥ c, i.e. s/m ≥ c − 5e-5: size the
-    // prefix from that threshold, with q53's 1e-9 slack toward admission
-    val cSlack = lit((minContainment - 5e-5) * (1.0 - 1e-9))
-    // span df as ONE window over the h partitioning instead of a
-    // groupBy + join-back (guide §2.4; r8)
-    val prefix = spans
-      .withColumn("hdf", count(lit(1)).over(Window.partitionBy(col("h"))))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("hdf").asc, col("h").asc)))
-      .join(sizes, Seq("id"))
-      .where(col("rk") <= col("nspans") - floor(cSlack * col("nspans")) + 1)
-      .select(col("h"), col("id"))
+    // one consumer: not materialized
+    val prefix = rarestFirstPrefix(spans, sizes,
+      (minContainment - 5e-5) * (1.0 - 1e-9))
     // prefix × full postings, both orientations in one symmetric join;
     // candidates carry ids only
-    prefix.select(col("h"), col("id").as("pid"))
-      .join(spans.select(col("h"), col("id").as("oid")), Seq("h"))
+    prefix.select(col("elem"), col("id").as("pid"))
+      .join(spans.select(col("elem"), col("id").as("oid")), Seq("elem"))
       .where(col("pid") =!= col("oid"))
       .select(least(col("pid"), col("oid")).as("id_a"),
         greatest(col("pid"), col("oid")).as("id_b"))

@@ -41,6 +41,8 @@ class MatSpec extends AnyFunSuite {
   test("reliable mode: ngramJaccard, prefixJaccardJoin and spanDupStats " +
     "produce output identical to local-checkpoint mode, and checkpoint " +
     "data actually lands in the configured dir") {
+    // spanContainmentJoin and minhashLsh ride along: their shingle
+    // tables checkpoint through Dedup.shingleTable
     val rows = (0L until 12L).map { i =>
       (i, (0 until 8).map(j => s"w${(i * 7 + j * 3) % 11}").mkString(" "))
     }
@@ -49,11 +51,20 @@ class MatSpec extends AnyFunSuite {
     val baseNg = canon(Dedup.ngramJaccard(df, "doc_id", "text", 0.3))
     val basePj = canon(Dedup.prefixJaccardJoin(df, "doc_id", "text", 0.3))
     val baseSp = canon(Dedup.spanDupStats(df, "doc_id", "text", n = 3))
+    val baseSc = canon(Dedup.spanContainmentJoin(df, "doc_id", "text",
+      n = 3, minContainment = 0.3))
+    val baseMh = canon(Dedup.minhashLsh(df, "doc_id", "text",
+      bands = 16, threshold = 0.2))
+    assert(baseSc.nonEmpty && baseMh.nonEmpty)
     withCheckpointDir { dir =>
       assert(Mat.reliable(df))
       assert(canon(Dedup.ngramJaccard(df, "doc_id", "text", 0.3)) == baseNg)
       assert(canon(Dedup.prefixJaccardJoin(df, "doc_id", "text", 0.3)) == basePj)
       assert(canon(Dedup.spanDupStats(df, "doc_id", "text", n = 3)) == baseSp)
+      assert(canon(Dedup.spanContainmentJoin(df, "doc_id", "text",
+        n = 3, minContainment = 0.3)) == baseSc)
+      assert(canon(Dedup.minhashLsh(df, "doc_id", "text",
+        bands = 16, threshold = 0.2)) == baseMh)
       // the reliable path really wrote checkpoint state (rdd-* dirs)
       def rddDirs(f: java.io.File): Int =
         if (f.isDirectory)

@@ -57,6 +57,85 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 >= 10L), pairs) // id_a is always corpus-side
   }
 
+  /** The array_union Jaccard verify the MinHash paths ran before the
+    * shared pair verify, kept as the reference the way UrlsSpec keeps
+    * the old split: (id_a, id_b, unrounded J) for every input pair. */
+  private def unionJaccardRef(pairs: org.apache.spark.sql.DataFrame,
+                              shA: org.apache.spark.sql.DataFrame,
+                              shB: org.apache.spark.sql.DataFrame)
+      : Seq[(Long, Long, Double)] =
+    pairs
+      .join(shA.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .join(shB.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+
+  test("minhash verify ≡ the array_union Jaccard reference: minhashLsh " +
+    "and minhashLshJoin on the planted corpora and a seeded random " +
+    "corpus (1-3 token docs, repeated shingles), both shingle algos") {
+    val base = (1 to 60).map(i => s"token$i").mkString(" ")
+    val nearDup = (1 to 57).map(i => s"token$i").mkString(" ") + " tokenX tokenY tokenZ"
+    val other = (100 to 160).map(i => s"word$i").mkString(" ")
+    val planted = Seq((1L, base), (2L, nearDup), (3L, other))
+    val plantedBatch = Seq((10L, base), (11L, other), (12L, other))
+    val rnd = new scala.util.Random(17)
+    val words = (0 until 9).map(i => s"v$i")
+    val random = (0L until 40L).map { i =>
+      val text = (i % 8) match {
+        case 0 => words(rnd.nextInt(3)) // one token: one whole-doc gram
+        case 1 => Seq.fill(2 + rnd.nextInt(2))(words(rnd.nextInt(3))).mkString(" ")
+        case 2 => Seq.fill(1 + rnd.nextInt(4))("x y z").mkString(" ") // repeats
+        case _ => Seq.fill(4 + rnd.nextInt(10))(words(rnd.nextInt(words.length)))
+          .mkString(" ")
+      }
+      (i, text)
+    }
+    def rounded(xs: Seq[(Long, Long, Double)]): Set[(Long, Long, Double)] =
+      xs.map { case (a, b, j) =>
+        (a, b, BigDecimal(j).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }.toSet
+    def triples(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // candidates come from the code under test at threshold 0 (every
+    // candidate pair has J ≥ 0); the reference verifies those pairs, and
+    // each threshold — including the exact J of observed pairs, where the
+    // unrounded comparison decides — must keep the same pairs and values
+    def check(label: String, ref: Seq[(Long, Long, Double)],
+              run: Double => org.apache.spark.sql.DataFrame): Unit = {
+      assert(ref.exists(_._3 > 0.0), s"$label: no overlapping candidate")
+      val js = ref.map(_._3).filter(_ > 0.0).distinct.sorted
+      val ts = (Seq(0.0, 0.02, 0.5, 0.8) ++
+        Seq(js.head, js(js.size / 2), js.last)).distinct
+      ts.foreach { t =>
+        assert(triples(run(t)) == rounded(ref.filter(_._3 >= t)),
+          s"$label t=$t")
+      }
+    }
+    for ((algo, corpora) <- Seq(
+        Dedup.AlgoXx64 -> Seq(("planted", planted, plantedBatch),
+          ("random", random.take(20), random.drop(20))),
+        Dedup.AlgoMd5 -> Seq(("random", random.take(20), random.drop(20))))) {
+      corpora.foreach { case (name, rows, batchRows) =>
+        val df = docsDf(rows ++ batchRows)
+        val sh = Dedup.shingleTable(df, "doc_id", "text", algo)
+        def self(t: Double) = Dedup.minhashLsh(df, "doc_id", "text",
+          k = 32, bands = 32, threshold = t, shingleAlgo = algo)
+        check(s"$algo $name self-join",
+          unionJaccardRef(self(0.0).select("id_a", "id_b"), sh, sh), self)
+        val (corpus, batch) = (docsDf(rows), docsDf(batchRows))
+        val shC = Dedup.shingleTable(corpus, "doc_id", "text", algo)
+        val shB = Dedup.shingleTable(batch, "doc_id", "text", algo)
+        def join(t: Double) = Dedup.minhashLshJoin(corpus, batch,
+          "doc_id", "text", k = 32, bands = 32, threshold = t,
+          shingleAlgo = algo)
+        check(s"$algo $name incremental",
+          unionJaccardRef(join(0.0).select("id_a", "id_b"), shC, shB), join)
+      }
+    }
+  }
+
   test("simhash: identical docs at distance 0, planted near-dup within 3") {
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val near = (1 to 39).map(i => s"tok$i").mkString(" ") + " tokDIFFERENT"
@@ -168,6 +247,40 @@ class PipelineOpsSpec extends AnyFunSuite {
       threshold = 0.05, n = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((3L, 4L)))
+  }
+
+  test("prefix floor-not-ceil boundary: at t = 0.035 a 200-element set's " +
+    "prefix must reach rank 194 (0.035·200 = 7.000000000000001, ceil " +
+    "would stop at 193), so the J = 7/200 pair surfaces; q63's slacked " +
+    "threshold keeps every one of those ranks") {
+    // A: 200 distinct tokens; B: 7 of them, so those 7 have df 2 and take
+    // A's ranks 194-200 under the rarest-first order
+    val a = (0 until 200).map(i => s"a$i")
+    val b = a.take(7)
+    assert(0.035 * 200 > 7.0 && 7.0 / 200 == 0.035)
+    val df = docsDf(Seq((1L, a.mkString(" ")), (2L, b.mkString(" "))))
+    val got = Dedup.prefixJaccardJoin(df, "doc_id", "text",
+      threshold = 0.035, n = 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
+    assert(got == Seq((1L, 2L, 7L, 0.035)), s"got $got")
+    // helper level: A's prefix at t is ranks 1-194, the last one shared
+    val postings = df.select(col("doc_id").as("id"),
+      explode(Dedup.shingleHashes(col("text"), 1)).as("elem"))
+    val sizes = postings.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+    val shared = postings.where(col("id") === 2L).select(col("elem"))
+      .collect().map(_.getLong(0)).toSet
+    def prefixOfA(t: Double): Map[Int, Long] =
+      Dedup.rarestFirstPrefix(postings, sizes, t).where(col("id") === 1L)
+        .select(col("rk"), col("elem")).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val atT = prefixOfA(0.035)
+    assert(atT.keySet == (1 to 194).toSet)
+    assert(atT.filter(kv => shared(kv._2)).keySet == Set(194))
+    // q63 sizes its prefix from (c − 5e-5)·(1 − 1e-9): lowering t only
+    // lengthens the prefix, here to 195 ranks (⌊6.99⌋ = 6)
+    val q63 = prefixOfA((0.035 - 5e-5) * (1.0 - 1e-9))
+    assert(atT.toSet.subsetOf(q63.toSet) && q63.size == 195)
   }
 
   test("simhash quarter-pair blocking (maxDist<=2) finds planted near-dup " +

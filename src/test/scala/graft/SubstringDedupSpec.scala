@@ -209,14 +209,16 @@ class SubstringDedupSpec extends AnyFunSuite {
       (i.toLong, s"${uniq(100 + i, 15)} $hot ${uniq(200 + i, 15)}")) ++
       Seq((900L, uniq(900, 20)), (901L, uniq(900, 20)))
     val df = docsDf(corpus)
+    // the shared prefix helper's column names: postings (id, elem),
+    // sizes (id, sz)
     val spans = df.select(col("doc_id").as("id"),
-      explode(Dedup.shingleHashes(col("text"), 8)).as("h"))
-    val sizes = spans.groupBy(col("id")).agg(count(lit(1)).as("nspans"))
+      explode(Dedup.shingleHashes(col("text"), 8)).as("elem"))
+    val sizes = spans.groupBy(col("id")).agg(count(lit(1)).as("sz"))
     val cand = Dedup.containmentCandidates(spans, sizes, 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // the old self-join shape: the hot gram ALONE emits d(d-1)/2 pairs
-    val unbounded = spans.select(col("id").as("id_a"), col("h"))
-      .join(spans.select(col("id").as("id_b"), col("h")), Seq("h"))
+    val unbounded = spans.select(col("id").as("id_a"), col("elem"))
+      .join(spans.select(col("id").as("id_b"), col("elem")), Seq("elem"))
       .where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct().count()
     assert(unbounded >= d.toLong * (d - 1) / 2)
